@@ -62,16 +62,27 @@ object EtlPipeline {
     * runs at the SINK boundary (renameForSink) so duplicate business
     * names (two source fields → "Structure") are legal, matching the
     * reference CSV; reorder/dedup run on the unique source names.
+    *
+    * Lazy end to end: no request, no job. The R10 empty-result guard
+    * is an observed row count placed above the dedup aggregate, so the
+    * write is the job's only action and the scan (its codes
+    * enumeration included) is planned once. Above the aggregate the
+    * count survives AQE: a chain set that is empty only at runtime
+    * makes AQE drop the stages below the aggregate, and an observation
+    * there would complete without a count. `log` gets the warning
+    * when the write finds no rows.
     */
-  def transform(df: DataFrame, cfg: Config): DataFrame = {
+  def transform(df: DataFrame, cfg: Config,
+                log: String => Unit = m => System.err.println(m)): DataFrame = {
     val ordered = Etl.reorderColumns(df,
       cfg.expectedOrder.flatMap(t => cfg.renameMap.collect {
         case (src, tgt) if tgt == t => src
       }) ++ cfg.expectedOrder.filterNot(cfg.renameMap.values.toSet))
-    val deduped = Etl.dedupRows(Etl.emptyGuard(ordered))
+    val deduped = Etl.emptyGuard(Etl.dedupRows(ordered), log)
     Etl.renameForSink(deduped, cfg.renameMap)
   }
 
-  def run(spark: SparkSession, cfg: Config): Unit =
-    Etl.writeCsv(transform(extract(spark, cfg), cfg), cfg.outputPath, cfg.singleFile)
+  def run(spark: SparkSession, cfg: Config,
+          log: String => Unit = m => System.err.println(m)): Unit =
+    Etl.writeCsv(transform(extract(spark, cfg), cfg, log), cfg.outputPath, cfg.singleFile)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.ExecutionContext
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
@@ -103,11 +104,30 @@ object Etl {
     stringifyNested(df).dropDuplicates()
 
   /** R10 — empty-result guard: warn + proceed (etl.py:197-199).
-    * `isEmpty` is a limit-1 job, not a count.
+    *
+    * Lazy: it runs no job of its own. It attaches an observed row
+    * count (`observe` → a `CollectMetrics` node) and calls `log` when
+    * the first action on the returned frame completes with 0 rows, so
+    * the sink's own write is the only scan (an `isEmpty` here would
+    * plan and partly run the source a second time). The warning
+    * therefore comes when that action completes, not before it, and
+    * `log` runs on Spark's listener thread, so it should return quickly.
+    *
+    * Placement: apply it ABOVE any aggregate of the frame (e.g. after
+    * [[dedupRows]]). Below an aggregate whose input turns out empty
+    * only at runtime, AQE's empty-relation propagation drops the
+    * observing stage from the final plan, and the observation
+    * completes without a count. A frame that never sees an action
+    * never warns, and its observation stays registered with the
+    * session until one does.
     */
   def emptyGuard(df: DataFrame, log: String => Unit = m => System.err.println(m)): DataFrame = {
-    if (df.isEmpty) log("[graft.etl] empty result — writing empty output")
-    df
+    val obs = Observation()
+    val out = df.observe(obs, count(lit(1)))
+    obs.future.foreach { r =>
+      if (r.length == 1 && r.getLong(0) == 0L) log("[graft.etl] empty result — writing empty output")
+    }(ExecutionContext.parasitic)
+    out
   }
 
   /** Full reference chain: restrict to codes' key set (R2/R3), rename

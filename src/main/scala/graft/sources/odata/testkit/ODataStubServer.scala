@@ -115,7 +115,12 @@ class ODataStubServer(
   private val rateLimitLeft = new java.util.concurrent.atomic.AtomicInteger(rateLimitFirst)
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-  @volatile var requestLog: Vector[String] = Vector.empty
+  // every inbound request URI, in arrival order. Handlers run on a
+  // thread pool, so the append is a locked read-modify-write: a plain
+  // `:+=` on a volatile field loses entries under concurrent chains.
+  private var uris: Vector[String] = Vector.empty
+  def requestLog: Vector[String] = synchronized(uris)
+  def requestLog_=(v: Vector[String]): Unit = synchronized { uris = v }
 
   /** CLIENT round-trips: every inbound request except the stub's own
     * `$batch` loopback dispatches — what the batch-control-plane spec
@@ -504,7 +509,7 @@ class ODataStubServer(
 
   private def handle(ex: HttpExchange): Unit = {
     val q = parseQuery(ex.getRequestURI.getRawQuery)
-    requestLog :+= ex.getRequestURI.toString
+    synchronized { uris :+= ex.getRequestURI.toString }
     if (ex.getRequestHeaders.getFirst("X-Graft-Loopback") == null)
       clientRequests.incrementAndGet()
 
