@@ -216,17 +216,26 @@ object ODataClient {
     else throw new ODataHttpException(r.status, url, r.body)
   }
 
+  /** Re-auths one request may make. The token cache is shared by every
+    * task thread, so a fresh grant can be used up or expired by
+    * concurrent requests before this one reaches the server: the first
+    * re-auth replaces the expired token, the second covers that race.
+    * A server refusing every fresh token still fails after two grants.
+    */
+  private val MaxReauths = 2
+
   /** The retry core, returning the final [[Response]] so callers that
     * DISCRIMINATE on status (the schema probe's 404-segment check) can
     * still ride the transient-failure budget. Absorbed within
     * `maxRetries`: 5xx/429 from the DATA url, 5xx/429 from the OAUTH
     * TOKEN endpoint (bearerToken throws ODataHttpException(tokenUrl)
     * from inside get — a token-endpoint blip deserves the same budget
-    * as a data-url one), and network IOExceptions. One transparent
-    * re-auth per request: a 401 under oauth evicts the cached token
-    * (the server's validity clock wins) and retries with a fresh
-    * grant; a second 401 — like any other non-retryable or
-    * budget-exhausted status — is RETURNED for the caller to judge.
+    * as a data-url one), and network IOExceptions. Transparent
+    * re-auth: a 401 under oauth evicts the cached token (the server's
+    * validity clock wins) and retries with a fresh grant, up to
+    * [[MaxReauths]] times per request; the next 401 — like any other
+    * non-retryable or budget-exhausted status — is RETURNED for the
+    * caller to judge.
     */
   def getWithRetryResponse(url: String, user: Option[String],
                            password: Option[String], timeoutMs: Int,
@@ -234,7 +243,7 @@ object ODataClient {
                            extraHeaders: Seq[(String, String)] = Nil,
                            oauth: Option[OAuthConfig] = None): Response = {
     var attempt = 0
-    var reauthed = false
+    var reauths = 0
     while (true) {
       try {
         // resolve the bearer HERE (not inside get) so a 401 can evict
@@ -250,8 +259,8 @@ object ODataClient {
           if (usedTok.isDefined) get(url, None, None, timeoutMs, hdrs, None)
           else get(url, user, password, timeoutMs, hdrs, None)
         if (r.status >= 200 && r.status < 300) return r
-        if (r.status == 401 && oauth.isDefined && !reauthed) {
-          reauthed = true
+        if (r.status == 401 && oauth.isDefined && reauths < MaxReauths) {
+          reauths += 1
           for (cfg <- oauth; t <- usedTok) evictToken(cfg, t)
         } else {
           val retryable = r.status >= 500 || r.status == 429
@@ -302,7 +311,7 @@ object ODataClient {
       sb.append("]}").toString
     }
     var attempt = 0
-    var reauthed = false
+    var reauths = 0
     while (true) {
       // a token-endpoint 5xx/429 rides the same retry budget as the
       // batch POST itself (the getWithRetryResponse convention)
@@ -366,8 +375,8 @@ object ODataClient {
               s"id=$id url=$u — refusing to treat a dropped sub-request as data")
         }
         return byId
-      } else if (r.status == 401 && oauth.isDefined && !reauthed) {
-        reauthed = true
+      } else if (r.status == 401 && oauth.isDefined && reauths < MaxReauths) {
+        reauths += 1
         for (cfg <- oauth; t <- usedTok) evictToken(cfg, t)
       } else if ((r.status >= 500 || r.status == 429) && attempt < maxRetries) {
         Thread.sleep(r.retryAfterMs.getOrElse(backoffMs * (1L << attempt)))

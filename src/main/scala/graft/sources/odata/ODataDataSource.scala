@@ -12,6 +12,7 @@ import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedRe
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, MapType, ShortType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -922,6 +923,20 @@ case class ODataInputPartition(structureField: Option[String],
                                skipRange: Option[(Long, Long)] = None)
   extends InputPartition
 
+/** Driver-side scan metrics (DSv2 `reportDriverMetrics`): what the
+  * structure-code enumeration cost planning. Spark renders a value by
+  * instantiating the metric class by name, hence the no-arg classes.
+  */
+class ODataCodesRequestsMetric extends CustomSumMetric {
+  override def name(): String = "codesRequests"
+  override def description(): String = "codes-entity requests sent while planning"
+}
+
+class ODataCodesMsMetric extends CustomSumMetric {
+  override def name(): String = "codesMs"
+  override def description(): String = "structure-code enumeration time while planning (ms)"
+}
+
 class ODataScan(schema: StructType, opts: ODataOptions,
                 pushedEq: Seq[(String, OLit)], limit: Option[Int],
                 orderBy: Seq[(String, Boolean)],
@@ -948,13 +963,7 @@ class ODataScan(schema: StructType, opts: ODataOptions,
     if (!opts.reportStatistics || pushedAgg.isDefined)
       (java.util.OptionalLong.empty(), java.util.OptionalLong.empty())
     else try {
-      val filters = ODataFilters.render(pushedEq, pushedIn, pushedConds)
-      val countUrl = ODataClient.buildUrl(
-        opts.entityUrl(opts.entity) + "/$count",
-        if (filters.nonEmpty) Seq("$filter" -> filters.mkString(" and ")) else Nil)
-      val rows = ODataClient.getWithRetry(countUrl, opts.user, opts.password,
-        opts.timeoutMs, opts.maxRetries, opts.retryBackoffMs,
-        oauth = opts.oauth).trim.toLong
+      val rows = countRows(opts.entity, ODataFilters.render(pushedEq, pushedIn, pushedConds))
       val width = math.max(schema.defaultSize, 1)
       (java.util.OptionalLong.of(math.max(rows, 1L) * width),
         java.util.OptionalLong.of(rows))
@@ -967,6 +976,32 @@ class ODataScan(schema: StructType, opts: ODataOptions,
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong = reportedStats._1
     override def numRows(): java.util.OptionalLong = reportedStats._2
+  }
+
+  /** One point-in-time `/$count` of `entity` under the rendered
+    * `filters` (AND-ed). */
+  private def countRows(entity: String, filters: Seq[String]): Long =
+    ODataClient.getWithRetry(
+      ODataClient.buildUrl(opts.entityUrl(entity) + "/$count",
+        if (filters.nonEmpty) Seq("$filter" -> filters.mkString(" and ")) else Nil),
+      opts.user, opts.password, opts.timeoutMs, opts.maxRetries,
+      opts.retryBackoffMs, oauth = opts.oauth).trim.toLong
+
+  // what the structure-code enumeration cost this scan's planning: the
+  // requests it sent (a retried request counts once) and its wall time
+  private val codesRequests = new java.util.concurrent.atomic.AtomicLong
+  private val codesNanos = new java.util.concurrent.atomic.AtomicLong
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new ODataCodesRequestsMetric, new ODataCodesMsMetric)
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+    Array(metric("codesRequests", codesRequests.get),
+      metric("codesMs", codesNanos.get / 1000000L))
   }
 
   /** RUNTIME filtering (the DSv2 dynamic-partition-pruning hook): a
@@ -1039,6 +1074,25 @@ class ODataScan(schema: StructType, opts: ODataOptions,
     * exactly the listed values — in both cases the codes-entity
     * enumeration is skipped entirely.
     *
+    * The enumeration reads the structure field of every codes-entity
+    * row, as the reference's one `$select=<f>&$top=<pageSize>` chain
+    * does, but not one page after another. The first page is that
+    * request; when it carries a continuation, its row count `n` is the
+    * server's page size, and one `/$count` sizes the rest as
+    * `$skip=k·n&$top=n` tiles (the last one runs to the end of the
+    * first request's `$top` and follows its own continuation) fetched
+    * concurrently on a driver pool of at most min(tiles,
+    * maxPartitions, defaultParallelism) threads — one thread when
+    * `requestPauseMs` asks for politeness. The tiles send no
+    * `$orderby`: OData requires `$top`/`$skip` to page over a stable
+    * ordering without one, which the serial continuation relies on
+    * too. A tile that fails after its retries fails planning, and the
+    * pool never outlives the call. If the tiles read a different row
+    * count than `/$count` answered, the entity changed in between:
+    * the scan warns and re-reads the keys through the serial chain,
+    * so drift costs time but never drops a code. The result is the
+    * same sorted distinct set either way, nulls and "" dropped.
+    *
     * Cached per scan instance: Spark may call this more than once for
     * one execution (AQE re-plans, speculative planning), and the
     * skip-range path issues a live `/$count` — re-issuing it could
@@ -1070,13 +1124,7 @@ class ODataScan(schema: StructType, opts: ODataOptions,
         // TopN is a GLOBAL cap range fetches would break, so those
         // shapes keep the single chain)
         if (opts.skipRangePartitions > 1 && limit.isEmpty && orderBy.isEmpty) {
-          val filters = ODataFilters.render(pushedEq, pushedIn, pushedConds)
-          val countUrl = ODataClient.buildUrl(
-            opts.entityUrl(opts.entity) + "/$count",
-            if (filters.nonEmpty) Seq("$filter" -> filters.mkString(" and ")) else Nil)
-          val total = ODataClient.getWithRetry(countUrl, opts.user, opts.password,
-            opts.timeoutMs, opts.maxRetries, opts.retryBackoffMs,
-            oauth = opts.oauth).trim.toLong
+          val total = countRows(opts.entity, ODataFilters.render(pushedEq, pushedIn, pushedConds))
           if (total == 0) return Array.empty[InputPartition]
           val n = math.min(opts.skipRangePartitions.toLong, total)
           val per = (total + n - 1) / n
@@ -1093,6 +1141,10 @@ class ODataScan(schema: StructType, opts: ODataOptions,
         // the tenant answer empty chains, same correctness)
         def restrict(vs: Seq[String]): Seq[String] =
           runtimeValues.fold(vs)(rv => vs.filter(rv.contains))
+        // bin sorted keys into ≤ maxPartitions tasks: bounds the task
+        // count at any key cardinality AND caps the global request
+        // concurrency (politeness — the reference was fully
+        // sequential; SURVEY §7.4 risk 4)
         def bins(vs0: Seq[String]): Array[InputPartition] = {
           val vs = vs0.distinct.sorted
           if (vs.isEmpty) return Array.empty
@@ -1113,37 +1165,87 @@ class ODataScan(schema: StructType, opts: ODataOptions,
           case None if runtimeValues.isDefined =>
             bins(runtimeValues.get.toSeq)
           case None =>
-            val url = ODataClient.buildUrl(opts.entityUrl(opts.codesEntity), Seq(
-              "$select" -> f, "$top" -> opts.pageSize.toString, "$format" -> "json"))
-            val keys = scala.collection.mutable.TreeSet.empty[String]
-            var page = ODataClient.parsePage(ODataClient.getWithRetry(
-              url, opts.user, opts.password, opts.timeoutMs,
-              opts.maxRetries, opts.retryBackoffMs, oauth = opts.oauth),
-              base = url)
-            keys ++= page.rows.flatMap(_.get(f)).filter(v => v != null && v.nonEmpty)
-            while (page.nextLink.isDefined) {
-              page = ODataClient.parsePage(ODataClient.getWithRetry(
-                page.nextLink.get, opts.user, opts.password, opts.timeoutMs,
-                opts.maxRetries, opts.retryBackoffMs, oauth = opts.oauth),
-                base = page.nextLink.get)
-              keys ++= page.rows.flatMap(_.get(f)).filter(v => v != null && v.nonEmpty)
-            }
+            val t0 = System.nanoTime()
+            val keys = try enumerateCodes(f)
+              finally codesNanos.addAndGet(System.nanoTime() - t0)
             if (keys.isEmpty) {
               // reference semantics (etl.py:197-199): no partition keys →
               // empty result (plus a warning), NOT an unfiltered scan
               logWarning(s"no distinct values of $f in codes entity — empty scan")
               Array.empty[InputPartition]
-            } else {
-              // bin sorted keys into ≤ maxPartitions tasks: bounds the
-              // task count at any key cardinality AND caps the global
-              // request concurrency (politeness — the reference was
-              // fully sequential; SURVEY §7.4 risk 4)
-              val perBin = math.max(1, math.ceil(keys.size.toDouble / opts.maxPartitions).toInt)
-              keys.toSeq.grouped(perBin)
-                .map(vs => ODataInputPartition(Some(f), vs): InputPartition).toArray
-            }
+            } else bins(keys.toSeq)
           }
         }
+    }
+  }
+
+  /** The distinct non-empty values of `f` over the codes entity: the
+    * first page, then concurrent `$skip` tiles checked against one
+    * `/$count`, or the serial page chain (see the note on [[planned]]).
+    */
+  private def enumerateCodes(f: String): Set[String] = {
+    def fetch(url: String): ODataClient.Page = {
+      // a tile cancelled by a failed sibling stops at its next request
+      if (Thread.currentThread().isInterrupted) throw new InterruptedException(url)
+      codesRequests.incrementAndGet()
+      ODataClient.parsePage(ODataClient.getWithRetry(url, opts.user,
+        opts.password, opts.timeoutMs, opts.maxRetries, opts.retryBackoffMs,
+        oauth = opts.oauth), base = url)
+    }
+    // one page chain followed to its end: (values, rows read)
+    @scala.annotation.tailrec
+    def walk(page: ODataClient.Page, keys: Set[String] = Set.empty,
+             rows: Long = 0L): (Set[String], Long) = {
+      val ks = keys ++ page.rows.flatMap(_.get(f)).filter(v => v != null && v.nonEmpty)
+      page.nextLink match {
+        case Some(next) => walk(fetch(next), ks, rows + page.rows.size)
+        case None => (ks, rows + page.rows.size)
+      }
+    }
+    def codesUrl(params: (String, String)*): String =
+      ODataClient.buildUrl(opts.entityUrl(opts.codesEntity),
+        ("$select" -> f) +: params :+ ("$format" -> "json"))
+
+    val first = fetch(codesUrl("$top" -> opts.pageSize.toString))
+    val n = first.rows.size.toLong
+    if (first.nextLink.isEmpty || n == 0 || n >= opts.pageSize) return walk(first)._1
+    codesRequests.incrementAndGet()
+    val counted = countRows(opts.codesEntity, Nil)
+    // the rows the serial chain reads: its $top caps the whole answer
+    val total = math.min(counted, opts.pageSize.toLong)
+    // at least one tile, so a count no larger than the first page still
+    // reads past it (and shows the drift)
+    val last = math.max(n, (total - 1) / n * n)
+    val tiles = (n to last by n).map(skip => codesUrl("$skip" -> skip.toString,
+      "$top" -> (if (skip == last) opts.pageSize - skip else n).toString))
+    val threads =
+      if (opts.requestPauseMs > 0) 1
+      else math.max(1, Seq(tiles.size, opts.maxPartitions,
+        org.apache.spark.sql.SparkSession.getActiveSession
+          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+          .map(_.sparkContext.defaultParallelism).getOrElse(1)).min)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads, r => {
+      val t = new Thread(r, "odata-codes-tile"); t.setDaemon(true); t
+    })
+    val parts = try {
+      val done = new java.util.concurrent.ExecutorCompletionService[(Set[String], Long)](pool)
+      tiles.foreach(u => done.submit(() => walk(fetch(u))))
+      // the first failed tile fails planning; `finally` cancels the rest
+      tiles.map { _ =>
+        try done.take().get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(opts.timeoutMs.toLong, java.util.concurrent.TimeUnit.MILLISECONDS)
+    }
+    val read = n + parts.map(_._2).sum
+    if (read == total) parts.foldLeft(walk(first.copy(nextLink = None))._1)(_ ++ _._1)
+    else {
+      logWarning(s"odata codes entity ${opts.codesEntity}: /$$count answered $counted " +
+        s"but the pages read $read of the $total expected rows — it changed while " +
+        s"planning; re-reading the structure codes through the serial page chain")
+      walk(first)._1
     }
   }
 

@@ -137,9 +137,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *                     exchanges the credentials for a bearer token at
   *                     the token endpoint, caches it JVM-wide per
   *                     (tokenUrl, clientId), refreshes at 80% of
-  *                     `expires_in`, and transparently re-auths ONCE
-  *                     on a 401 (the server's validity clock wins); a
-  *                     second 401 surfaces as a credential error.
+  *                     `expires_in`, and transparently re-auths on a
+  *                     401 (the server's validity clock wins), at most
+  *                     twice per request, since concurrent tasks can
+  *                     use up a fresh shared token; a third 401
+  *                     surfaces as a credential error.
   *                     Default `authType=basic` keeps the reference's
   *                     Basic-auth parity (etl.py:40-41). When oauth is
   *                     configured it wins over user/password.

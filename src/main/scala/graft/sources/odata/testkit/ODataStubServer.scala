@@ -89,7 +89,10 @@ class ODataStubServer(
     oauthCreds: Option[(String, String)] = None,
     tokenValidRequests: Int = Int.MaxValue,
     // fault injection: first N token grants answer 503 (transient)
-    tokenTransientFailures: Int = 0) {
+    tokenTransientFailures: Int = 0,
+    // fault injection: every request whose $skip is one of these
+    // offsets answers 500 permanently — one poisoned $skip tile
+    failSkips: Set[Long] = Set.empty) {
 
   private val tokenTransientLeft =
     new java.util.concurrent.atomic.AtomicInteger(tokenTransientFailures)
@@ -640,6 +643,9 @@ class ODataStubServer(
       .split('/').lastOption.getOrElse("")
     if (failEntities.contains(entitySeg)) {
       respond(ex, 500, """{"error": "injected entity failure"}"""); return
+    }
+    if (q.get("$skip").exists(s => failSkips.contains(s.toLong))) {
+      respond(ex, 500, """{"error": "injected $skip failure"}"""); return
     }
     val entityRows = extraEntities.getOrElse(entitySeg, rows)
 

@@ -1,6 +1,9 @@
 package graft.odata
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sources.odata.testkit.{ODataStubServer, StubNav}
@@ -258,7 +261,8 @@ class ODataSourceSpec extends SparkSpec {
       serverPageSize = 4, relativeNextLinks = true).start()
     try {
       assert(read(srv).count() == 30)
-      assert(srv.requestLog.count(_.contains("skiptoken")) >= 7,
+      // 3 value chains of 10 rows in pages of 4: 2 continuations each
+      assert(srv.requestLog.count(u => u.contains("skiptoken") && u.contains("%24filter")) == 6,
         s"the relative chain must have been followed: ${srv.requestLog}")
     } finally srv.stop()
     // v4 nav continuation: the Nav@odata.nextLink sibling is relative
@@ -2368,6 +2372,32 @@ class ODataSourceSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("oauth: a fresh token used up by concurrent requests costs a second re-auth, not a failure") {
+    import graft.sources.odata.ODataClient
+    val srv = new ODataStubServer(mkRows(1), "C0CHAR_STRUCTURE",
+      oauthCreds = Some(("race-client", "race-secret")), tokenValidRequests = 4).start()
+    try {
+      val cfg = ODataClient.OAuthConfig(s"${srv.url}/token", "race-client", "race-secret")
+      val url = ODataClient.buildUrl(s"${srv.url}/svc/E", Seq("$format" -> "json"))
+      def get(): String = ODataClient.getWithRetry(url, None, None, 5000, 0, 0L, oauth = Some(cfg))
+      (1 to 4).foreach(_ => get()) // the first token's 4 requests, spent
+      // 5 requests at once on the spent token: all 401 and share one
+      // fresh 4-request grant, so one of them is refused a second time
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+      val results = try {
+        val fs = (1 to 5).map(_ => pool.submit((() => {
+          start.await(); scala.util.Try(get())
+        }): java.util.concurrent.Callable[scala.util.Try[String]]))
+        start.countDown()
+        fs.map(_.get())
+      } finally pool.shutdown()
+      assert(results.forall(_.isSuccess),
+        results.collect { case scala.util.Failure(e) => e.getMessage })
+      assert(srv.tokensIssued.get() >= 3, srv.tokensIssued.get())
+    } finally srv.stop()
+  }
+
   test("strict stub: delta rounds project to the DEFINING query's \\$select (v4 11.3)") {
     import graft.sources.odata.ODataClient
     val upd = Map("TEMPLOYEE_UUID" -> "Employee 1 RENAMED",
@@ -2717,6 +2747,161 @@ class ODataSourceSpec extends SparkSpec {
       assert(r.getString(0) == "Manager of 0")
       assert(!r.getSeq[String](1).contains("Manager"),
         s"nav must not leak into extras: ${r.getSeq[String](1)}")
+    } finally srv.stop()
+  }
+
+  // ---- structure-code enumeration: first page, /$count, $skip tiles ----
+
+  // one codes row per i: null every 5th, "" every 7th, otherwise a code
+  // unique to that row, so a tile read twice or skipped changes the keys
+  private def codesRows(n: Int): Seq[Map[String, String]] =
+    (0 until n).map(i => Map("C0CHAR_STRUCTURE" ->
+      (if (i % 5 == 0) null else if (i % 7 == 0) "" else f"CODE$i%03d")))
+
+  // the reference's answer over the same rows: sorted distinct, no null or ""
+  private def serialKeys(codes: Seq[Map[String, String]]): Seq[String] =
+    codes.flatMap(_.get("C0CHAR_STRUCTURE")).filter(v => v != null && v.nonEmpty)
+      .distinct.sorted
+
+  // a separate Codes entity served 7 rows to a page, with the relative
+  // continuations real v2 tenants emit
+  private def codesStub(codes: Seq[Map[String, String]], countBias: Int = 0,
+                        failSkips: Set[Long] = Set.empty): ODataStubServer =
+    new ODataStubServer(mkRows(3), "C0CHAR_STRUCTURE", serverPageSize = 7,
+      extraEntities = Map("Codes" -> codes), countBias = countBias,
+      relativeNextLinks = true, failSkips = failSkips).start()
+
+  private def readCodes(srv: ODataStubServer, extra: Map[String, String] = Map.empty) =
+    read(srv, Map("codesEntity" -> "Codes") ++ extra)
+
+  private def scanOf(df: DataFrame): BatchScanExec =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case b: BatchScanExec => b
+    }.head
+
+  // runs the scan; its planned partition values, in partition order
+  private def plannedValues(df: DataFrame): Seq[String] = {
+    df.collect()
+    scanOf(df).inputPartitions.flatMap(
+      _.asInstanceOf[graft.sources.odata.ODataInputPartition].structureValues)
+  }
+
+  // requests the enumeration sent to the Codes entity, by kind: the
+  // first page, the /$count, a $skip tile (its continuations included)
+  // or a page of the serial chain. The schema probes ($top=1) also
+  // address the codes entity; they are not part of it.
+  private def codesKinds(srv: ODataStubServer): Map[String, Int] =
+    srv.requestLog.flatMap { raw =>
+      val uri = new java.net.URI(raw)
+      val q = Option(uri.getQuery).getOrElse("")
+      if (uri.getPath.endsWith("/Codes/$count")) Some("count")
+      else if (!uri.getPath.endsWith("/Codes") || q.contains("$top=1&")) None
+      else if (q.contains("$skip=")) Some("tile")
+      else if (q.contains("$skiptoken=")) Some("chain")
+      else Some("first")
+    }.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  // the WARN lines the scan logs while `body` runs
+  private def scanWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger(classOf[graft.sources.odata.ODataScan].getName).asInstanceOf[Logger]
+    val msgs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "scan-warnings", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN)
+          msgs.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    logger.addAppender(app)
+    try (body, msgs.asScala.toSeq)
+    finally { logger.removeAppender(app); app.stop() }
+  }
+
+  private def tileThreads: Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
+      .filter(_ == "odata-codes-tile")
+
+  test("structure codes: first page + one /$count + concurrent $skip tiles plan the serial chain's keys") {
+    // N not a multiple of the page size 7; the last tile is short
+    for (n <- Seq(45, 50)) {
+      val codes = codesRows(n)
+      val srv = codesStub(codes)
+      try {
+        assert(plannedValues(readCodes(srv)) == serialKeys(codes))
+        assert(codesKinds(srv) == Map("first" -> 1, "count" -> 1, "tile" -> ((n + 6) / 7 - 1)),
+          srv.requestLog.mkString("\n"))
+      } finally srv.stop()
+    }
+    // one thread (requestPauseMs > 0) and one bin plan the same values
+    val codes = codesRows(45)
+    val srv = codesStub(codes)
+    try assert(plannedValues(readCodes(srv, Map("requestPauseMs" -> "1",
+      "maxPartitions" -> "1"))) == serialKeys(codes))
+    finally srv.stop()
+  }
+
+  test("structure codes: a codes entity that fits one page sends no /$count") {
+    val codes = codesRows(6)
+    val srv = codesStub(codes)
+    try {
+      assert(plannedValues(readCodes(srv)) == serialKeys(codes))
+      assert(codesKinds(srv) == Map("first" -> 1), srv.requestLog.mkString("\n"))
+    } finally srv.stop()
+  }
+
+  test("structure codes: a /$count the tiles disagree with warns and re-reads the serial chain") {
+    val codes = codesRows(45)
+    for (bias <- Seq(3, -3)) {
+      val srv = codesStub(codes, countBias = bias)
+      try {
+        val (got, warned) = scanWarnings(plannedValues(readCodes(srv)))
+        assert(got == serialKeys(codes), s"countBias $bias")
+        assert(warned.exists(_.contains("changed while planning")), s"countBias $bias: $warned")
+        // the serial fallback followed the first page's continuations
+        assert(codesKinds(srv).get("chain").contains(45 / 7),
+          s"countBias $bias: ${srv.requestLog.mkString("\n")}")
+      } finally srv.stop()
+    }
+  }
+
+  test("structure codes: a tile that keeps failing fails the read, and no tile thread outlives planning") {
+    val srv = codesStub(codesRows(45), failSkips = Set(14L))
+    try {
+      val e = intercept[Exception] {
+        plannedValues(readCodes(srv, Map("maxRetries" -> "2", "retryBackoffMs" -> "1")))
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.getMessage.contains("HTTP 500")), causes.map(_.getMessage))
+      // the poisoned tile was retried, then failed planning
+      assert(srv.requestLog.count(_.contains("%24skip=14&")) == 3, srv.requestLog.mkString("\n"))
+      val deadline = System.nanoTime() + 5000000000L
+      while (tileThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(tileThreads.isEmpty, tileThreads)
+    } finally srv.stop()
+  }
+
+  test("driver metrics: codesRequests equals the codes requests the server saw; codesMs is the planning time") {
+    val srv = codesStub(codesRows(45))
+    try {
+      val df = readCodes(srv)
+      val t0 = System.nanoTime()
+      df.collect()
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      val m = scanOf(df).metrics
+      val sent = codesKinds(srv).values.sum
+      assert(sent == 1 + 1 + 6)
+      assert(m("codesRequests").value == sent)
+      assert(m("codesMs").value >= 0 && m("codesMs").value <= wallMs,
+        s"codesMs ${m("codesMs").value} of a $wallMs ms action")
+      // a scan pruned to one value never enumerates
+      srv.requestLog = Vector.empty
+      val pruned = readCodes(srv).where(col("C0CHAR_STRUCTURE") === "CODE001")
+      pruned.collect()
+      assert(scanOf(pruned).metrics("codesRequests").value == 0)
+      assert(codesKinds(srv).isEmpty, srv.requestLog.mkString("\n"))
     } finally srv.stop()
   }
 
