@@ -690,9 +690,8 @@ object Dedup {
     * with RELIABLE `checkpoint()` writes (survive executor loss — the
     * right mode on a real cluster); the default `localCheckpoint`
     * (executor-local blocks) is the low-overhead local-mode stand-in.
-    * Either way the previous round's blocks are unpersisted as soon as
-    * the next round is materialized, so executor storage stays
-    * O(|edges|), not O(rounds·|edges|).
+    * Either way executor storage stays O(|edges|), not
+    * O(rounds·|edges|) ([[Rounds.release]]).
     */
   def connectedClusters(vertices: DataFrame, idCol: String, pairs: DataFrame,
                         checkpointDir: Option[String] = None): DataFrame = {
@@ -801,7 +800,7 @@ object Dedup {
         checkpointDir)
       .localCheckpoint() // materialize BEFORE overwriting what we read
     next.write.mode("overwrite").parquet(path)
-    unpersistBacking(next)
+    Rounds.release(next)
   }
 
   /** Representative keeping served FROM a materialized
@@ -905,7 +904,7 @@ object Dedup {
     */
   private[graft] def starEdges(pairs: DataFrame, checkpointDir: Option[String],
                                maxRounds: Int = 64): (DataFrame, Int) = {
-    var edges = materialize(
+    var edges = Rounds.materialize(
       pairs.select(greatest(col("doc_a"), col("doc_b")).as("u"),
                    least(col("doc_a"), col("doc_b")).as("v"))
         .where(col("u") =!= col("v"))
@@ -915,14 +914,14 @@ object Dedup {
     var rounds = 0
     var done = nEdges == 0L
     while (!done && rounds < maxRounds) {
-      val next = materialize(smallStar(largeStar(edges)), checkpointDir)
+      val next = Rounds.materialize(smallStar(largeStar(edges)), checkpointDir)
       val nNext = next.count()
       // set equality = equal cardinality + (next \ edges) empty; the
       // anti-join probe (a limit-1 job, not a data collect) only runs
       // when the cardinality matched — a changed count is already
       // proof of non-convergence, so non-final rounds pay one job less
       done = nNext == nEdges && next.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      unpersistBacking(edges)
+      Rounds.release(edges)
       edges = next
       nEdges = nNext
       rounds += 1
@@ -963,50 +962,6 @@ object Dedup {
       .union(mins.select(col("u"), col("m").as("v")))
       .distinct()
   }
-
-  /** Eagerly materialize an iteration state and cut its lineage:
-    * reliable `checkpoint()` when a checkpointDir is given (blocks
-    * survive executor loss), `localCheckpoint` otherwise.
-    */
-  @volatile private var lastCheckpointDir: Option[String] = None
-
-  private def materialize(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        // honor THIS caller's dir even when some earlier caller (or
-        // unrelated code) already set a different one on the context
-        if (!lastCheckpointDir.contains(dir)) {
-          sc.setCheckpointDir(dir)
-          lastCheckpointDir = Some(dir)
-        }
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-
-  /** Free the storage behind a [[materialize]]d frame (the
-    * checkpointed RDD sits directly under a LogicalRDD leaf):
-    * unpersist the cached blocks (localCheckpoint mode) AND delete the
-    * round's reliable checkpoint files (checkpoint mode — Spark only
-    * auto-deletes them under spark.cleaner.referenceTracking
-    * .cleanCheckpoints, default off). Without both, an N-round loop
-    * accumulates N edge tables in executor storage / on the
-    * checkpoint volume. Only call once the NEXT round is materialized
-    * — its computation read this round's data.
-    */
-  private def unpersistBacking(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-        l.rdd.getCheckpointFile.foreach { p =>
-          try {
-            val path = new org.apache.hadoop.fs.Path(p)
-            path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(path, true)
-          } catch { case _: Exception => () } // cleanup is best-effort
-        }
-      case _ => ()
-    }
 
   /** Embedding near-dup: exact cosine ≥ threshold over all pairs of a
     * (pre-filtered) set. Exact and quadratic — callers restrict the
@@ -1457,7 +1412,7 @@ object Dedup {
     spark.range(1)
       .select(lit(m.toLong).as("m_bits"), lit(k.toLong).as("k_hashes"))
       .write.mode("overwrite").parquet(s"${path}_meta") // commit point
-    graft.operators.Graph.unpersistBacking(merged)
+    Rounds.release(merged)
   }
 
   /** Probe a materialized bloom filter — the PRODUCTION membership

@@ -327,14 +327,34 @@ object Embeddings {
   def topPrincipalComponent(emb: DataFrame, idCol: String, vecCol: String,
                             iters: Int = 8, scale: Long = 10000L): DataFrame = {
     val cov = covarianceMatrix(emb, idCol, vecCol, scale)
+    val v = powerIterate(cov, iters)
+    // eigenvalue as ‖C·v_final‖ (v is unit) — one extra matvec off
+    // the final checkpointed vector. The d-row output materializes
+    // eagerly so the checkpointed covariance and vector can drop NOW
+    // instead of living for the caller's JVM lifetime.
+    val wf = cov.join(v, "j").groupBy(col("i"))
+      .agg(sum(col("c") * col("x")).as("w"))
+    val lam = wf.agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
+    val out = Rounds.materialize(v.crossJoin(broadcast(lam))
+      .select(col("j").as("dim"), round(col("x"), 6).as("loading"),
+              round(col("nrm"), 6).as("eigenvalue")))
+    Rounds.release(cov, v)
+    out
+  }
+
+  /** `iters` rounds of power iteration on a checkpointed (i, j, c)
+    * covariance from the uniform unit vector: the materialized (j, x)
+    * unit vector, x rounded to 9 every round.
+    */
+  private def powerIterate(cov: DataFrame, iters: Int): DataFrame = {
     // dims derive from the CHECKPOINTED covariance, not from mu —
     // round 1 would otherwise re-run the corpus explode+aggregate
     // that mu's lineage carries
     val dims = cov.select(col("i")).distinct()
     val dRow = dims.agg(count(lit(1)).cast("double").as("d"))
-    var v = dims.crossJoin(broadcast(dRow))
-      .select(col("i").as("j"), round(lit(1.0) / sqrt(col("d")), 9).as("x"))
-    for (_ <- 1 to iters) {
+    Rounds.iterate(dims.crossJoin(broadcast(dRow))
+        .select(col("i").as("j"), round(lit(1.0) / sqrt(col("d")), 9).as("x")),
+        iters) { (v, _) =>
       // ONE eager job per round: the norm stays a lazy 1-row subquery
       // inside the round's checkpoint, so w's d²-row matvec evaluates
       // twice within one job (cov is checkpointed — cheap) instead of
@@ -344,26 +364,9 @@ object Embeddings {
       val w = cov.join(v, "j").groupBy(col("i"))
         .agg(sum(col("c") * col("x")).as("w"))
       val nrm = w.agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-      val prev = v
-      v = w.crossJoin(broadcast(nrm))
+      w.crossJoin(broadcast(nrm))
         .select(col("i").as("j"), round(col("w") / col("nrm"), 9).as("x"))
-        .localCheckpoint()
-      Graph.unpersistBacking(prev)
     }
-    // eigenvalue as ‖C·v_final‖ (v is unit) — one extra matvec off
-    // the final checkpointed vector. The d-row output materializes
-    // eagerly so the checkpointed covariance and vector can drop NOW
-    // instead of living for the caller's JVM lifetime.
-    val wf = cov.join(v, "j").groupBy(col("i"))
-      .agg(sum(col("c") * col("x")).as("w"))
-    val lam = wf.agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-    val out = v.crossJoin(broadcast(lam))
-      .select(col("j").as("dim"), round(col("x"), 6).as("loading"),
-              round(col("nrm"), 6).as("eigenvalue"))
-      .localCheckpoint()
-    Graph.unpersistBacking(cov)
-    Graph.unpersistBacking(v)
-    out
   }
 
   /** Top `nComponents` principal components by power iteration with
@@ -384,32 +387,22 @@ object Embeddings {
     * Scale shape: identical to the single-component op — the corpus is
     * touched ONCE (the shared d²-fanout covariance); each deflation is
     * a d²-row join, each round a d²-row matvec. Storage stays one d²
-    * table: the previous residual's checkpoint is released as soon as
-    * the next lands.
+    * table.
     */
   def topPrincipalComponents(emb: DataFrame, idCol: String, vecCol: String,
                              nComponents: Int = 3, iters: Int = 8,
                              scale: Long = 10000L): DataFrame = {
-    var cov = covarianceMatrix(emb, idCol, vecCol, scale)
+    require(nComponents >= 1, s"nComponents must be >= 1: $nComponents")
     val comps = Seq.newBuilder[DataFrame]
-    for (m <- 1 to nComponents) {
+    // the d-row component vectors, released at the end: each one feeds
+    // the deflation that lands after its component
+    val vs = Seq.newBuilder[DataFrame]
+    def component(cov: DataFrame, m: Int): (DataFrame, DataFrame) = {
       // dims re-derived from the CURRENT residual (each checkpointed):
       // earlier residuals' blocks are released, so no lineage may
       // reach back through them
-      val dims = cov.select(col("i")).distinct()
-      val dRow = dims.agg(count(lit(1)).cast("double").as("d"))
-      var v = dims.crossJoin(broadcast(dRow))
-        .select(col("i").as("j"), round(lit(1.0) / sqrt(col("d")), 9).as("x"))
-      for (_ <- 1 to iters) {
-        val w = cov.join(v, "j").groupBy(col("i"))
-          .agg(sum(col("c") * col("x")).as("w"))
-        val nrm = w.agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-        val prev = v
-        v = w.crossJoin(broadcast(nrm))
-          .select(col("i").as("j"), round(col("w") / col("nrm"), 9).as("x"))
-          .localCheckpoint()
-        Graph.unpersistBacking(prev)
-      }
+      val v = powerIterate(cov, iters)
+      vs += v
       val wf = cov.join(v, "j").groupBy(col("i"))
         .agg(sum(col("c") * col("x")).as("w"))
       val lam = wf.agg(round(sqrt(sum(col("w") * col("w"))), 9).as("lam"))
@@ -418,20 +411,20 @@ object Embeddings {
                 round(col("x"), 6).as("loading"),
                 round(col("lam"), 6).as("eigenvalue"))
         .localCheckpoint()
-      if (m < nComponents) {
-        val prevCov = cov
-        cov = cov
-          .join(v.select(col("j").as("i"), col("x").as("xi")), "i")
-          .join(v.select(col("j"), col("x").as("xj")), "j")
-          .crossJoin(broadcast(lam))
-          .select(col("i"), col("j"),
-            round(col("c") - col("lam") * col("xi") * col("xj"), 12).as("c"))
-          .localCheckpoint()
-        Graph.unpersistBacking(prevCov)
-      }
-      Graph.unpersistBacking(v)
+      (v, lam)
     }
-    Graph.unpersistBacking(cov)
+    val residual = Rounds.iterate(covarianceMatrix(emb, idCol, vecCol, scale),
+        nComponents - 1) { (cov, m) =>
+      val (v, lam) = component(cov, m)
+      cov
+        .join(v.select(col("j").as("i"), col("x").as("xi")), "i")
+        .join(v.select(col("j"), col("x").as("xj")), "j")
+        .crossJoin(broadcast(lam))
+        .select(col("i"), col("j"),
+          round(col("c") - col("lam") * col("xi") * col("xj"), 12).as("c"))
+    }
+    component(residual, nComponents)
+    Rounds.release(residual +: vs.result(): _*)
     comps.result().reduce(_ unionByName _)
   }
 

@@ -1331,9 +1331,7 @@ object Etl {
       if (fs.exists(dir)) fs.delete(dir, true)
     }
     commitCdcMarker(spark, path, create = true)
-    Graph.unpersistBacking(bucketed)
-    Graph.unpersistBacking(cur)
-    Graph.unpersistBacking(merged)
+    Rounds.release(bucketed, cur, merged)
   }
 
   /** Serve the CDC table (bucket column dropped). Refuses a

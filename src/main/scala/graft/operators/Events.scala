@@ -201,7 +201,7 @@ object Events {
              userCol: String = "user_id", typeCol: String = "event_type",
              tsCol: String = "ts"): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    var reached = events.where(col(typeCol) === steps.head)
+    val first = events.where(col(typeCol) === steps.head)
       .groupBy(col(userCol)).agg(min(col(tsCol)).as("t"))
       .withColumn("reached_step", lit(1L))
     // r14 depth guard: `reached` is consumed TWICE per step (eligible
@@ -213,36 +213,30 @@ object Events {
     // lineage with a bounded per-user checkpoint each round (the
     // sessionFunnel discipline); this makes funnel() EAGER for
     // steps.size > 4, documented here as the contract.
-    val checkpointRounds = steps.size > 4
-    for ((st, i) <- steps.tail.zipWithIndex) {
-      // only users who completed ALL previous steps can advance — a
-      // user stuck at step k must not match later steps out of order
-      val eligible = reached.where(col("reached_step") === (i + 1))
+    // step r advances users who completed ALL previous steps — a user
+    // stuck at step k must not match later steps out of order
+    def advance(reached: DataFrame, r: Int): DataFrame = {
+      val eligible = reached.where(col("reached_step") === r)
         .select(col(userCol), col("t"))
-      val nxt = events.where(col(typeCol) === st)
+      val nxt = events.where(col(typeCol) === steps(r))
         .select(col(userCol), col(tsCol).as("nts"))
         .join(eligible, Seq(userCol))
         .where(col("nts") > col("t"))
         .groupBy(col(userCol)).agg(min(col("nts")).as("_t2"))
-      val prev = reached
-      reached = reached.join(nxt, Seq(userCol), "left")
+      reached.join(nxt, Seq(userCol), "left")
         .select(col(userCol),
           coalesce(col("_t2"), col("t")).as("t"),
           (col("reached_step") + when(col("_t2").isNotNull, 1L).otherwise(0L))
             .as("reached_step"))
-      if (checkpointRounds) {
-        reached = reached.localCheckpoint()
-        if (i > 0) graft.operators.Graph.unpersistBacking(prev)
-      }
     }
-    if (checkpointRounds) {
-      // deep-funnel exit: materialize the bounded per-user output and
-      // release the last round's backing (the pageRank exit shape)
-      val out = reached.select(col(userCol), col("reached_step"))
-        .localCheckpoint()
-      graft.operators.Graph.unpersistBacking(reached)
+    if (steps.size > 4) {
+      // per-step checkpoints, then the pageRank exit shape
+      val reached = Rounds.iterate(first, steps.size - 1)(advance)
+      val out = Rounds.materialize(reached.select(col(userCol), col("reached_step")))
+      Rounds.release(reached)
       out
-    } else reached.select(col(userCol), col("reached_step"))
+    } else (1 until steps.size).foldLeft(first)(advance)
+      .select(col(userCol), col("reached_step"))
   }
 
 
@@ -304,8 +298,7 @@ object Events {
         when(col("n1") > 0, round(d(col("n_sessions")) / d(col("n1")), 6))
           .as("share_of_first"))
       .localCheckpoint() // bounded; lets sess/counts release below
-    graft.operators.Graph.unpersistBacking(sess)
-    graft.operators.Graph.unpersistBacking(counts)
+    Rounds.release(sess, counts)
     out
   }
 
@@ -450,24 +443,19 @@ object Events {
       .union(tm.select(col("to_type").as("state")).distinct())
       .distinct()
     val n1 = states.agg(count(lit(1)).as("n")) // 1-row scalar
-    var pi = states.crossJoin(broadcast(n1))
+    val pi0 = states.crossJoin(broadcast(n1))
       .select(col("state"), round(lit(1.0) / d(col("n")), 9).as("pi"))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val prev = pi
-      pi = tm.join(prev.select(col("state").as("from_type"), col("pi")),
+    val pi = Rounds.iterate(pi0, rounds) { (prev, _) =>
+      tm.join(prev.select(col("state").as("from_type"), col("pi")),
           "from_type")
         .select(col("to_type").as("state"),
           round(round(col("pi") * col("prob"), 9) * 1e9, 0).cast("long")
             .as("m9"))
         .groupBy("state").agg(round(sum(col("m9")) / 1e9, 9).as("pi"))
-        .localCheckpoint()
-      graft.operators.Graph.unpersistBacking(prev)
     }
-    val out = pi.select(col("state"), round(col("pi"), 6).as("stationary_prob"))
-      .localCheckpoint()
-    graft.operators.Graph.unpersistBacking(pi)
-    graft.operators.Graph.unpersistBacking(tm)
+    val out = Rounds.materialize(pi.select(col("state"), round(col("pi"), 6).as("stationary_prob")))
+    Rounds.release(pi, tm)
     out
   }
 
@@ -745,7 +733,7 @@ object Events {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(path)
     fs.create(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"), true).close()
-    graft.operators.Graph.unpersistBacking(rows)
+    Rounds.release(rows)
     affected
   }
 
@@ -799,7 +787,7 @@ object Events {
     // the dynamic-overwrite committer does not rewrite the root
     // marker — restore it explicitly as the commit point
     fs.create(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"), true).close()
-    graft.operators.Graph.unpersistBacking(remaining)
+    Rounds.release(remaining)
   }
 
   /** Funnel CONVERSION summary — the per-step aggregate every product

@@ -60,7 +60,7 @@ object Graph {
     val ind = inn.groupBy("node").agg(count(lit(1)).as("ind"))
     val grid = nodes.select(col("node").as("a"))
       .crossJoin(nodes.select(col("node").as("b"))) // |V|² bounded
-    var s = grid.withColumn("s9",
+    val s0 = grid.withColumn("s9",
         when(col("a") === col("b"), lit(1000000000L)).otherwise(lit(0L)))
       .localCheckpoint()
     def roundOf(sPrev: DataFrame): DataFrame = {
@@ -84,12 +84,7 @@ object Graph {
     }
     // one eager checkpoint per round (round fusing measured slower —
     // see pageRank's round-8 note)
-    for (_ <- 1 to rounds) {
-      val next = roundOf(s)
-      val prev = s
-      s = next.localCheckpoint()
-      unpersistBacking(prev)
-    }
+    val s = Rounds.iterate(s0, rounds)((sPrev, _) => roundOf(sPrev))
     s.select(col("a"), col("b"),
       round(col("s9").cast("double") / 1e9, 9).as("simrank"))
   }
@@ -113,7 +108,7 @@ object Graph {
       .repartition(col("src"))
       .persist()
     val nRow = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
-    var ranks = nodes.crossJoin(broadcast(nRow))
+    val ranks0 = nodes.crossJoin(broadcast(nRow))
       .select(col("node"), round(lit(1.0) / col("n_nodes"), 9).as("pr"))
     def roundOf(r: DataFrame): DataFrame = {
       val dangling = r.join(outW, Seq("node"), "left_anti")
@@ -134,26 +129,20 @@ object Graph {
     // round (dangling mass + contributions), so a lazy plan DOUBLES
     // each iteration — 2^iters subplans by analysis time. An eager
     // |V|-row localCheckpoint per round (the GraphX discipline)
-    // keeps the plan constant-size; the previous round's blocks are
-    // dropped as soon as the new round lands (ADVICE r3 lesson).
+    // keeps the plan constant-size.
     // MEASURED NEGATIVE (round 8): fusing two rounds per checkpoint —
     // halving the job count — ran ~25% SLOWER at sf0.1 (pagerank
     // 3.6→4.6 s, hits 5.5→6.7 s, 3-rep medians): the fused lazy round
     // re-evaluates its two-consumer inner state, and the per-round
     // checkpoint is also what lets AQE right-size each round's input.
     // Per-round checkpoints stay.
-    for (_ <- 1 to iters) {
-      val next = roundOf(ranks)
-      val prev = ranks
-      ranks = next.localCheckpoint()
-      unpersistBacking(prev)
-    }
+    val ranks = Rounds.iterate(ranks0, iters)((r, _) => roundOf(r))
     // re-materialize the projection so EVERY working table — including
     // the last round's checkpoint — can drop now instead of living for
     // the caller's JVM lifetime (at scale the rank table is |V| rows
     // of executor storage)
-    val out = ranks.select(col("node"), col("pr")).localCheckpoint()
-    unpersistBacking(ranks)
+    val out = Rounds.materialize(ranks.select(col("node"), col("pr")))
+    Rounds.release(ranks)
     norm.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     outW.unpersist(blocking = false)
@@ -205,7 +194,6 @@ object Graph {
         round(when(col("is_seed").isNotNull, lit(1.0) / col("n_seeds"))
           .otherwise(lit(0.0)), 9).as("s"))
       .persist()
-    var ranks = sTab.select(col("node"), col("s").as("pr"))
     def pprRoundOf(r: DataFrame): DataFrame = {
       val dangling = r.join(outW, Seq("node"), "left_anti")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dang"))
@@ -221,16 +209,12 @@ object Graph {
             9).as("pr"))
     }
     // same two-consumers-per-round discipline as pageRank: eager
-    // |V|-row checkpoint per round, previous blocks dropped at once
-    // (round fusing measured slower — see pageRank's note)
-    for (_ <- 1 to iters) {
-      val next = pprRoundOf(ranks)
-      val prev = ranks
-      ranks = next.localCheckpoint()
-      unpersistBacking(prev)
-    }
-    val out = ranks.select(col("node"), col("pr")).localCheckpoint()
-    unpersistBacking(ranks)
+    // |V|-row checkpoint per round (round fusing measured slower —
+    // see pageRank's note)
+    val ranks = Rounds.iterate(sTab.select(col("node"), col("s").as("pr")), iters)(
+      (r, _) => pprRoundOf(r))
+    val out = Rounds.materialize(ranks.select(col("node"), col("pr")))
+    Rounds.release(ranks)
     norm.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     outW.unpersist(blocking = false)
@@ -263,52 +247,41 @@ object Graph {
       .distinct()
       .persist()
     val nRow = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
-    var hubs = nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), round(lit(1.0) / col("n_nodes"), 9).as("hub"))
-    var auths: DataFrame = null
+    // a lazy placeholder until round 1's authorities land
+    var auths = nodes.select(col("node"), lit(0.0).as("auth")).limit(0)
     // per-HALF-round eager checkpoints (fusing the two half-rounds
     // under one checkpoint measured ~20% slower at sf0.1 — see
-    // pageRank's round-8 note)
-    for (_ <- 1 to iters) {
-      val prevH = hubs
-      val prevA = auths
-      val aRaw = e.join(hubs.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("hub") * col("w")).as("raw"))
-      val aTot = aRaw.agg(sum(col("raw")).as("tot"))
-      auths = nodes.join(aRaw, Seq("node"), "left")
-        .crossJoin(broadcast(aTot))
-        .select(col("node"),
-          round(coalesce(col("raw"), lit(0.0)) / col("tot"), 9).as("auth"))
-        .localCheckpoint()
-      val hRaw = e.join(auths.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(sum(col("auth") * col("w")).as("raw"))
-      val hTot = hRaw.agg(sum(col("raw")).as("tot"))
-      hubs = nodes.join(hRaw, Seq("node"), "left")
-        .crossJoin(broadcast(hTot))
-        .select(col("node"),
-          round(coalesce(col("raw"), lit(0.0)) / col("tot"), 9).as("hub"))
-        .localCheckpoint()
-      unpersistBacking(prevH)
-      if (prevA != null) unpersistBacking(prevA)
+    // pageRank's round-8 note): the authority half materializes in
+    // the step, the hub half is the round's state
+    val hubs = Rounds.iterate(nodes.crossJoin(broadcast(nRow))
+        .select(col("node"), round(lit(1.0) / col("n_nodes"), 9).as("hub")), iters) {
+      (h, _) =>
+        Rounds.release(auths)
+        val aRaw = e.join(h.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst").as("node")).agg(sum(col("hub") * col("w")).as("raw"))
+        val aTot = aRaw.agg(sum(col("raw")).as("tot"))
+        auths = Rounds.materialize(nodes.join(aRaw, Seq("node"), "left")
+          .crossJoin(broadcast(aTot))
+          .select(col("node"),
+            round(coalesce(col("raw"), lit(0.0)) / col("tot"), 9).as("auth")))
+        val hRaw = e.join(auths.withColumnRenamed("node", "dst"), "dst")
+          .groupBy(col("src").as("node")).agg(sum(col("auth") * col("w")).as("raw"))
+        val hTot = hRaw.agg(sum(col("raw")).as("tot"))
+        nodes.join(hRaw, Seq("node"), "left")
+          .crossJoin(broadcast(hTot))
+          .select(col("node"),
+            round(coalesce(col("raw"), lit(0.0)) / col("tot"), 9).as("hub"))
     }
     // same discipline as pageRank's exit: materialize the final join
     // eagerly, then drop both score checkpoints and the cached sides
-    val out = auths.join(hubs, "node")
-      .select(col("node"), col("auth"), col("hub"))
-      .localCheckpoint()
-    unpersistBacking(auths)
-    unpersistBacking(hubs)
+    val out = Rounds.materialize(auths.join(hubs, "node")
+      .select(col("node"), col("auth"), col("hub")))
+    Rounds.release(auths, hubs)
     e.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     out
   }
 
-  /** Drop the cached RDD behind an (eagerly) localCheckpoint'ed
-    * DataFrame — the localCheckpoint form of Dedup.unpersistBacking.
-    * Safe no-op on frames that were never checkpointed (round 1's
-    * predecessor is the lazy initial rank table). Shared with the
-    * other per-round-checkpointing iterations (Embeddings PCA).
-    */
   /** Weighted synchronous label propagation communities: every node
     * starts labeled with itself; each round, a node adopts the label
     * with the greatest incident edge-weight sum among its neighbors'
@@ -350,8 +323,8 @@ object Graph {
       .persist()
     // symmetrized: every node appears as a src
     val nodes = und.select(col("src").as("node")).distinct().persist()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to iters) {
+    val labels = Rounds.iterate(nodes.select(col("node"), col("node").as("label")),
+        iters) { (labels, _) =>
       val votes = und.join(labels.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"), col("label"))
         .agg(round(sum(col("w")), 9).as("score"))
@@ -359,14 +332,11 @@ object Graph {
       val winners = votes.join(mx, "node")
         .where(col("score") === col("mx")) // exact: both sides round(…, 9) of identical inputs
         .groupBy("node").agg(min(col("label")).as("label"))
-      val next = nodes.join(winners, Seq("node"), "left")
+      nodes.join(winners, Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-      val prev = labels
-      labels = next.localCheckpoint()
-      unpersistBacking(prev)
     }
-    val out = labels.select(col("node"), col("label").as("community")).localCheckpoint()
-    unpersistBacking(labels)
+    val out = Rounds.materialize(labels.select(col("node"), col("label").as("community")))
+    Rounds.release(labels)
     und.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     out
@@ -402,25 +372,21 @@ object Graph {
       .union(e.select(col("dst").as("node")))
       .distinct()
       .persist()
-    var dist = nodes.select(col("node"),
-      when(col("node") === source, lit(0.0))
-        .otherwise(lit(null).cast("double")).as("dist"))
-    for (_ <- 1 to iters) {
+    val dist = Rounds.iterate(nodes.select(col("node"),
+        when(col("node") === source, lit(0.0))
+          .otherwise(lit(null).cast("double")).as("dist")), iters) { (dist, _) =>
       val relax = e
         .join(dist.where(col("dist").isNotNull).withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(min(round(col("dist") + col("len"), 9)).as("cand"))
-      val next = dist.join(relax, Seq("node"), "left")
+      dist.join(relax, Seq("node"), "left")
         .select(col("node"),
           when(col("dist").isNull, col("cand"))
             .when(col("cand").isNull, col("dist"))
             .otherwise(least(col("dist"), col("cand"))).as("dist"))
-      val prev = dist
-      dist = next.localCheckpoint()
-      unpersistBacking(prev)
     }
-    val out = dist.select(col("node"), col("dist")).localCheckpoint()
-    unpersistBacking(dist)
+    val out = Rounds.materialize(dist.select(col("node"), col("dist")))
+    Rounds.release(dist)
     e.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     out
@@ -495,7 +461,7 @@ object Graph {
     def coin(maskCol: Column, nodeCol: Column, r: Int): Column =
       if (packRounds) shiftright(maskCol, r - 1).bitwiseAND(lit(1L))
       else parity(nodeCol, r)
-    var und = {
+    val und0 = {
       val sym = dir0
         .union(dir0.select(col("v").as("u"), col("u").as("v")))
         .repartition(col("u"))
@@ -509,36 +475,30 @@ object Graph {
         .select("u", "v", "bu", "bv")
     }.localCheckpoint()
     var matched: DataFrame = null
-    for (r <- 1 to rounds) {
-      val pairs = und
-        .where(coin(col("bu"), col("u"), r) === 0 &&
-               coin(col("bv"), col("v"), r) === 1)
-        .groupBy("u").agg(min(col("v")).as("c"))
-        .groupBy(col("c").as("node_a")).agg(min(col("u")).as("node_b"))
-        .select(col("node_a"), col("node_b"), lit(r.toLong).as("round"))
-        .localCheckpoint()
-      matched = if (matched == null) pairs else matched.union(pairs)
-      val mn = pairs.select(col("node_a").as("n"))
-        .union(pairs.select(col("node_b").as("n")))
-      val prev = und
-      und = und
-        .join(broadcast(mn), col("u") === col("n"), "left_anti")
-        .join(broadcast(mn), col("v") === col("n"), "left_anti")
-        .localCheckpoint()
-      unpersistBacking(prev)
+    val und = Rounds.iterate(und0, rounds) { (und, r) =>
       // drained-graph early exit (maximal = drained: any surviving
-      // edge would have two unmatched endpoints). Probe from round 4
-      // — no nontrivial graph drains in 3 synchronous rounds, so
-      // earlier probes would be pure job latency. Runs on the
+      // edge would have two unmatched endpoints). Probe round 4's
+      // table on — no nontrivial graph drains in 3 synchronous rounds,
+      // so earlier probes would be pure job latency. Runs on the
       // checkpointed table; never re-derives the round.
-      if (r >= 4 && und.isEmpty) {
-        unpersistBacking(und)
-        unpersistBacking(dir0)
-        return matched
+      if (r > 4 && und.isEmpty) und
+      else {
+        val pairs = und
+          .where(coin(col("bu"), col("u"), r) === 0 &&
+                 coin(col("bv"), col("v"), r) === 1)
+          .groupBy("u").agg(min(col("v")).as("c"))
+          .groupBy(col("c").as("node_a")).agg(min(col("u")).as("node_b"))
+          .select(col("node_a"), col("node_b"), lit(r.toLong).as("round"))
+          .localCheckpoint()
+        matched = if (matched == null) pairs else matched.union(pairs)
+        val mn = pairs.select(col("node_a").as("n"))
+          .union(pairs.select(col("node_b").as("n")))
+        und
+          .join(broadcast(mn), col("u") === col("n"), "left_anti")
+          .join(broadcast(mn), col("v") === col("n"), "left_anti")
       }
     }
-    unpersistBacking(und)
-    unpersistBacking(dir0)
+    Rounds.release(und, dir0)
     matched // a lazy union of the checkpointed per-round pair tables
   }
 
@@ -586,7 +546,7 @@ object Graph {
     require(rounds >= 1, "rounds must be >= 1 (zero rounds match nothing)")
     val dir0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
       col(weightCol).cast("long").as("w"))
-    var und = dir0
+    val und0 = dir0
       .union(dir0.select(col("v").as("u"), col("u").as("v"), col("w")))
       .where(col("u") =!= col("v"))
       // one shuffle total: repartition(u) FIRST — HashPartitioning(u)
@@ -597,33 +557,29 @@ object Graph {
       .groupBy("u", "v").agg(max(col("w")).as("w"))
       .localCheckpoint()
     var matched: DataFrame = null
-    for (r <- 1 to rounds) {
-      val pref = und
-        .groupBy("u").agg(max(struct(col("w"), col("v"))).as("t"))
-        .select(col("u"), col("t.v").as("p"), col("t.w").as("w"))
-      val pairs = pref.as("a").join(pref.as("b"),
-          col("a.p") === col("b.u") && col("b.p") === col("a.u") &&
-            col("a.u") < col("b.u"))
-        .select(col("a.u").as("node_a"), col("b.u").as("node_b"),
-          col("a.w").as("w"), lit(r.toLong).as("round"))
-        .localCheckpoint()
-      matched = if (matched == null) pairs else matched.union(pairs)
-      val mn = pairs.select(col("node_a").as("n"))
-        .union(pairs.select(col("node_b").as("n")))
-      val prev = und
-      // broadcast removals + round-4 probe start: [[greedyMatching]]'s
-      // per-round scale shape, same bounds (matched set ≤ 2·|matches|)
-      und = und
-        .join(broadcast(mn), col("u") === col("n"), "left_anti")
-        .join(broadcast(mn), col("v") === col("n"), "left_anti")
-        .localCheckpoint()
-      unpersistBacking(prev)
-      if (r >= 4 && und.isEmpty) {
-        unpersistBacking(und)
-        return matched
+    // broadcast removals + round-4 probe start: [[greedyMatching]]'s
+    // per-round scale shape, same bounds (matched set ≤ 2·|matches|)
+    val und = Rounds.iterate(und0, rounds) { (und, r) =>
+      if (r > 4 && und.isEmpty) und
+      else {
+        val pref = und
+          .groupBy("u").agg(max(struct(col("w"), col("v"))).as("t"))
+          .select(col("u"), col("t.v").as("p"), col("t.w").as("w"))
+        val pairs = pref.as("a").join(pref.as("b"),
+            col("a.p") === col("b.u") && col("b.p") === col("a.u") &&
+              col("a.u") < col("b.u"))
+          .select(col("a.u").as("node_a"), col("b.u").as("node_b"),
+            col("a.w").as("w"), lit(r.toLong).as("round"))
+          .localCheckpoint()
+        matched = if (matched == null) pairs else matched.union(pairs)
+        val mn = pairs.select(col("node_a").as("n"))
+          .union(pairs.select(col("node_b").as("n")))
+        und
+          .join(broadcast(mn), col("u") === col("n"), "left_anti")
+          .join(broadcast(mn), col("v") === col("n"), "left_anti")
       }
     }
-    unpersistBacking(und)
+    Rounds.release(und)
     matched
   }
 
@@ -669,24 +625,20 @@ object Graph {
       .dropDuplicates("src", "dst")
       .persist()
     val nodes = und.select(col("src").as("node")).distinct()
-    var state = und.select(col("src").as("node"), col("dst").as("m"))
+    val b1 = und.select(col("src").as("node"), col("dst").as("m"))
       .union(nodes.select(col("node"), col("node").as("m")))
       .groupBy("node").agg(hll_sketch_agg(col("m"), lit(lgK)).as("sk"))
       .localCheckpoint() // B₁ by raw inserts — no union round
-    for (_ <- 2 to hops) {
+    val state = Rounds.iterate(b1, hops - 1) { (prev, _) =>
       val fromNbr = und
-        .join(state.select(col("node").as("dst"), col("sk")), Seq("dst"))
+        .join(prev.select(col("node").as("dst"), col("sk")), Seq("dst"))
         .select(col("src").as("node"), col("sk"))
-      val prev = state
-      state = fromNbr.union(prev.select("node", "sk"))
+      fromNbr.union(prev.select("node", "sk"))
         .groupBy("node").agg(hll_union_agg(col("sk")).as("sk"))
-        .localCheckpoint()
-      unpersistBacking(prev)
     }
-    val out = state
-      .select(col("node"), hll_sketch_estimate(col("sk")).as("n_ball_approx"))
-      .localCheckpoint()
-    unpersistBacking(state)
+    val out = Rounds.materialize(state
+      .select(col("node"), hll_sketch_estimate(col("sk")).as("n_ball_approx")))
+    Rounds.release(state)
     und.unpersist(blocking = false)
     out
   }
@@ -853,7 +805,7 @@ object Graph {
           .cast("double") / ((col("w2") / 2).cast("double")), 6))
           .as("clustering_coef"))
       .localCheckpoint() // 1-row output; materialize so the inputs release
-    unpersistBacking(deg)
+    Rounds.release(deg)
     canon.unpersist(blocking = false)
     oriented.unpersist(blocking = false)
     out
@@ -893,23 +845,19 @@ object Graph {
       .repartition(col("u"))
       .dropDuplicates("u", "v")
       .persist()
-    var c = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("c"))
+    val c0 = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val c = Rounds.iterate(c0, rounds) { (c, _) =>
       val nb = und.join(broadcast(c.select(col("node").as("v"), col("c").as("cv"))),
         Seq("v"))
       val w = Window.partitionBy("u").orderBy(desc("cv"), asc("v"))
-      val prev = c
-      c = nb.withColumn("rk", row_number().over(w))
+      nb.withColumn("rk", row_number().over(w))
         .where(col("cv") >= col("rk"))
         .groupBy(col("u").as("node"))
         .agg(max(col("rk")).cast("long").as("c"))
-        .localCheckpoint()
-      unpersistBacking(prev)
     }
-    val out = c.select(col("node"), col("c").as("coreness"))
-      .localCheckpoint()
-    unpersistBacking(c)
+    val out = Rounds.materialize(c.select(col("node"), col("c").as("coreness")))
+    Rounds.release(c)
     und.unpersist(blocking = false)
     out
   }
@@ -960,32 +908,31 @@ object Graph {
       .dropDuplicates("eu", "ev")
       .persist()
     val src = broadcast(sources.select(col(sourceCol).as("s")).distinct())
-    var state = src.select(col("s"), col("s").as("v"),
+    val state0 = src.select(col("s"), col("s").as("v"),
         lit(0L).as("dist"), lit(1L).as("sigma"))
       .localCheckpoint()
-    for (r <- 1 to hops) {
-      val frontier = state.where(col("dist") === r - 1)
+    val state = Rounds.iterate(state0, hops) { (prev, r) =>
+      val frontier = prev.where(col("dist") === r - 1)
         .select(col("s"), col("v").as("eu"), col("sigma"))
       val relax = e.join(broadcast(frontier), Seq("eu")) // map-only edge pass
         .groupBy(col("s"), col("ev"))
         .agg(sum(col("sigma")).as("sig"))
       val nxt = relax
-        .join(broadcast(state.select(col("s"), col("v").as("ev"))),
+        .join(broadcast(prev.select(col("s"), col("v").as("ev"))),
           Seq("s", "ev"), "left_anti")
         .select(col("s"), col("ev").as("v"), lit(r.toLong).as("dist"),
           col("sig").as("sigma"))
-      val prev = state
-      state = prev.union(nxt).localCheckpoint()
-      unpersistBacking(prev)
+      prev.union(nxt)
     }
     // backward pass: each level re-probes the persisted edge layout
     // with both state slices broadcast — no |S|·|E| materialization
-    var delta = state.select(col("s"), col("v"), lit(0L).as("d9"))
-    for (lvl <- hops to 1 by -1) {
+    val delta = Rounds.iterate(state.select(col("s"), col("v"), lit(0L).as("d9")),
+        hops) { (prev, r) =>
+      val lvl = hops + 1 - r
       val aSide = state.where(col("dist") === lvl - 1)
         .select(col("s"), col("v").as("eu"), col("sigma").as("sig_v"))
       val bSide = state.where(col("dist") === lvl)
-        .join(delta, Seq("s", "v"))
+        .join(prev, Seq("s", "v"))
         .select(col("s"), col("v").as("ev"), col("sigma").as("sig_w"),
           col("d9").as("dw9"))
       val contrib = e
@@ -996,22 +943,17 @@ object Graph {
               * (lit(1e9) + col("dw9").cast("double"))
               / col("sig_w").cast("double"), 0).cast("long").as("c9"))
         .groupBy("s", "v").agg(sum(col("c9")).as("add9"))
-      val prev = delta
-      delta = prev.join(contrib, Seq("s", "v"), "left")
+      prev.join(contrib, Seq("s", "v"), "left")
         .select(col("s"), col("v"),
           (col("d9") + coalesce(col("add9"), lit(0L))).as("d9"))
-        .localCheckpoint()
-      unpersistBacking(prev)
     }
-    val out = delta.where(col("s") =!= col("v"))
+    val out = Rounds.materialize(delta.where(col("s") =!= col("v"))
       .groupBy(col("v").as("node"))
       .agg(count(lit(1)).as("n_sources"), sum(col("d9")).as("sd9"))
       .where(col("sd9") > 0)
       .select(col("node"), col("n_sources"),
-        round(col("sd9").cast("double") / 1e9, 6).as("betweenness"))
-      .localCheckpoint()
-    unpersistBacking(delta)
-    unpersistBacking(state)
+        round(col("sd9").cast("double") / 1e9, 6).as("betweenness")))
+    Rounds.release(delta, state)
     e.unpersist(blocking = false)
     out
   }
@@ -1096,26 +1038,22 @@ object Graph {
       .union(e.select(col("dst").as("node")))
       .distinct()
       .persist()
-    var dist = nodes.crossJoin(broadcast(sources.toDF("source")))
+    val dist = Rounds.iterate(nodes.crossJoin(broadcast(sources.toDF("source")))
       .select(col("source"), col("node"),
         when(col("node") === col("source"), lit(0.0))
-          .otherwise(lit(null).cast("double")).as("dist"))
-    for (_ <- 1 to iters) {
+          .otherwise(lit(null).cast("double")).as("dist")), iters) { (dist, _) =>
       val relax = e
         .join(dist.where(col("dist").isNotNull).withColumnRenamed("node", "src"), "src")
         .groupBy(col("source"), col("dst").as("node"))
         .agg(min(round(col("dist") + col("len"), 9)).as("cand"))
-      val next = dist.join(relax, Seq("source", "node"), "left")
+      dist.join(relax, Seq("source", "node"), "left")
         .select(col("source"), col("node"),
           when(col("dist").isNull, col("cand"))
             .when(col("cand").isNull, col("dist"))
             .otherwise(least(col("dist"), col("cand"))).as("dist"))
-      val prev = dist
-      dist = next.localCheckpoint()
-      unpersistBacking(prev)
     }
-    val out = dist.localCheckpoint()
-    unpersistBacking(dist)
+    val out = Rounds.materialize(dist)
+    Rounds.release(dist)
     e.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     out
@@ -1319,17 +1257,36 @@ object Graph {
     * cache; each round shuffles the |V|-row probability table into
     * that layout and takes one src-keyed aggregate (map-side partial
     * first). Same eager per-round localCheckpoint as [[pageRank]].
+    *
+    * Input bound: `edges` is checkpointed eagerly, when the call is
+    * made, so it must be a bounded transition table (every registry
+    * caller passes ≤ |types|² rows); an unbounded edge stream would
+    * be materialized whole before round 1.
     */
   def absorptionProbability(edges: DataFrame, srcCol: String, dstCol: String,
                             weightCol: String, target: org.apache.spark.sql.Column,
                             iters: Int): DataFrame = {
     val (norm, nodes) = normalizedTransitions(edges, srcCol, dstCol, weightCol)
-    val prob = absorbIterate(norm, nodes, target, iters)
-    val out = prob.select(col("node"), round(col("pr"), 6).as("p_absorb"))
-      .localCheckpoint()
-    unpersistBacking(prob)
-    unpersistBacking(norm)
-    unpersistBacking(nodes)
+    // one eager checkpoint per round (round fusing measured slower —
+    // see pageRank's round-8 note; RE-MEASURED r13: lazy fusion of
+    // these single-consumer rounds was ~25% slower at sf0.1 — AQE
+    // re-planning the deep fused tree costs more than the per-round
+    // checkpoint jobs save)
+    val prob = Rounds.iterate(nodes.select(col("node"),
+        when(col("node") === target, lit(1.0)).otherwise(lit(0.0)).as("pr")),
+        iters) { (r, _) =>
+      val folded = norm
+        .join(r.withColumnRenamed("node", "dst"), "dst")
+        .withColumn("cl", round(round(col("p") * col("pr"), 9) * 1e9, 0).cast("long"))
+        .groupBy(col("src").as("node"))
+        .agg(round(sum(col("cl")) / 1e9, 9).as("v"))
+      nodes.join(folded, Seq("node"), "left")
+        .select(col("node"),
+          when(col("node") === target, lit(1.0))
+            .otherwise(coalesce(col("v"), lit(0.0))).as("pr"))
+    }
+    val out = Rounds.materialize(prob.select(col("node"), round(col("pr"), 6).as("p_absorb")))
+    Rounds.release(prob, norm, nodes)
     out
   }
 
@@ -1341,102 +1298,62 @@ object Graph {
     * instead of faking a finite time; a dangling state reads 1 —
     * one step into nowhere — by the same truncation). Same round-9 /
     * exact-long-sum discipline as the probability leg, so the oracle
-    * replays every round.
+    * replays every round. Same input bound as the probability leg:
+    * `edges` is checkpointed eagerly, so pass a bounded transition
+    * table.
     */
   def expectedAbsorptionTime(edges: DataFrame, srcCol: String, dstCol: String,
                              weightCol: String,
                              target: org.apache.spark.sql.Column,
                              iters: Int): DataFrame = {
     val (norm, nodes) = normalizedTransitions(edges, srcCol, dstCol, weightCol)
-    var t = nodes.select(col("node"), lit(0.0).as("et")).localCheckpoint()
-    for (_ <- 1 to iters) {
+    val t0 = nodes.select(col("node"), lit(0.0).as("et")).localCheckpoint()
+    val t = Rounds.iterate(t0, iters) { (t, _) =>
       val folded = norm
         .join(t.withColumnRenamed("node", "dst"), "dst")
         .withColumn("cl", round(round(col("p") * col("et"), 9) * 1e9, 0).cast("long"))
         .groupBy(col("src").as("node"))
         .agg(round(sum(col("cl")) / 1e9, 9).as("v"))
-      val prev = t
-      t = nodes.join(folded, Seq("node"), "left")
+      nodes.join(folded, Seq("node"), "left")
         .select(col("node"),
           when(col("node") === target, lit(0.0))
             .otherwise(round(lit(1.0) + coalesce(col("v"), lit(0.0)), 9))
             .as("et"))
-        .localCheckpoint()
-      unpersistBacking(prev)
     }
-    val out = t.select(col("node"), round(col("et"), 6).as("expected_steps"))
-      .localCheckpoint()
-    unpersistBacking(t)
-    unpersistBacking(norm)
-    unpersistBacking(nodes)
+    val out = Rounds.materialize(t.select(col("node"), round(col("et"), 6).as("expected_steps")))
+    Rounds.release(t, norm, nodes)
     out
   }
 
   /** Round-9 transition probabilities + node set from a weighted edge
-    * table, both persisted — the shared head of
-    * [[absorptionProbability]] and [[markovRemovalAttribution]].
-    * Caller unpersists both.
+    * table, both materialized before this returns — the shared head of
+    * [[absorptionProbability]], [[expectedAbsorptionTime]],
+    * [[markovRemovalAttribution]] and [[katzCentrality]]. Caller
+    * releases both.
     */
   private def normalizedTransitions(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String): (DataFrame, DataFrame) = {
-    // r14: checkpoint the edge projection FIRST — `e` was consumed
-    // twice (out-weight aggregate + the normalize join), so the lazy
-    // plan re-ran everything above the reused upstream exchange (the
-    // events window pass for the transition gates) twice per query.
-    // The transition table is bounded (≤|types|² rows for every
-    // caller), and every caller (absorption legs, Katz, the Markov
-    // attribution) already iterates with eager per-round checkpoints,
-    // so the eager construction here changes no contract. norm/nodes
-    // switch persist → localCheckpoint so `e`'s backing can release
-    // before return; callers release them via [[unpersistBacking]].
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-                         col(weightCol).cast("double").as("w"))
-      .localCheckpoint()
+    // checkpoint the edge projection FIRST — `e` is consumed twice
+    // (out-weight aggregate + the normalize join), so the lazy plan
+    // re-ran everything above the reused upstream exchange (the events
+    // window pass for the transition gates) twice per query. Measured
+    // against the lazy form (e lazy, norm/nodes persist()), sf0.1,
+    // 4 cores, 3-rep medians, two runs each: katz 2.26/2.54 s eager vs
+    // 2.97/3.56 lazy, absorption 1.36/1.70 vs 1.75/1.92, absorption
+    // time 1.47/1.73 vs 2.02/2.08, Markov attribution 3.52/3.95 vs
+    // 3.30/3.82. The price is the bounded-input precondition the four
+    // callers document.
+    val e = Rounds.materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+                         col(weightCol).cast("double").as("w")))
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-    val norm = e.join(outW, "src")
+    val norm = Rounds.materialize(e.join(outW, "src")
       .select(col("src"), col("dst"), round(col("w") / col("out_w"), 9).as("p"))
-      .repartition(col("src"))
-      .localCheckpoint()
-    val nodes = norm.select(col("src").as("node"))
+      .repartition(col("src")))
+    val nodes = Rounds.materialize(norm.select(col("src").as("node"))
       .union(norm.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    unpersistBacking(e)
+      .distinct())
+    Rounds.release(e)
     (norm, nodes)
-  }
-
-  /** The synchronous value-iteration core (see
-    * [[absorptionProbability]] for the determinism contract): returns
-    * the localCheckpointed round-`iters` (node, pr) table; caller
-    * releases it via [[unpersistBacking]].
-    */
-  private def absorbIterate(norm: DataFrame, nodes: DataFrame,
-      target: org.apache.spark.sql.Column, iters: Int): DataFrame = {
-    var prob = nodes.select(col("node"),
-      when(col("node") === target, lit(1.0)).otherwise(lit(0.0)).as("pr"))
-    def roundOf(r: DataFrame): DataFrame = {
-      val folded = norm
-        .join(r.withColumnRenamed("node", "dst"), "dst")
-        .withColumn("cl", round(round(col("p") * col("pr"), 9) * 1e9, 0).cast("long"))
-        .groupBy(col("src").as("node"))
-        .agg(round(sum(col("cl")) / 1e9, 9).as("v"))
-      nodes.join(folded, Seq("node"), "left")
-        .select(col("node"),
-          when(col("node") === target, lit(1.0))
-            .otherwise(coalesce(col("v"), lit(0.0))).as("pr"))
-    }
-    // one eager checkpoint per round (round fusing measured slower —
-    // see pageRank's round-8 note; RE-MEASURED r13: lazy fusion of
-    // these single-consumer rounds was ~25% slower at sf0.1 — AQE
-    // re-planning the deep fused tree costs more than the per-round
-    // checkpoint jobs save)
-    for (_ <- 1 to iters) {
-      val next = roundOf(prob)
-      val prev = prob
-      prob = next.localCheckpoint()
-      if (prev ne prob) unpersistBacking(prev)
-    }
-    prob
   }
 
   /** Markov removal-effect attribution (Anderl et al. 2016 — the
@@ -1468,6 +1385,11 @@ object Graph {
     * instead of (1+|channels|)·iters — no corpus rescan. `channels`
     * is an explicit policy list (which nodes are paid media), not
     * data-inferred.
+    *
+    * Input bound: `edges` is checkpointed eagerly, when the call is
+    * made, so it must be a bounded transition table (every registry
+    * caller passes ≤ |types|² rows); an unbounded edge stream would
+    * be materialized whole before round 1.
     */
   def markovRemovalAttribution(edges: DataFrame, starts: DataFrame,
       srcCol: String, dstCol: String, weightCol: String,
@@ -1502,25 +1424,22 @@ object Graph {
       .where(col("vt") === "" ||
              (col("src") =!= col("vt") && col("dst") =!= col("vt")))
     val nodesV = nodes.crossJoin(broadcast(vtDf))
-    var prob = nodesV.select(col("vt"), col("node"),
-      when(col("node") === target, lit(1.0)).otherwise(lit(0.0)).as("pr"))
     // one eager checkpoint per round (lazy round fusion RE-MEASURED
     // slower in r13 even for this single-consumer recurrence — AQE
     // re-planning the deep fused tree costs more than the per-round
-    // checkpoint jobs save; see absorbIterate's note)
-    for (_ <- 1 to iters) {
+    // checkpoint jobs save; see absorptionProbability's note)
+    val prob = Rounds.iterate(nodesV.select(col("vt"), col("node"),
+        when(col("node") === target, lit(1.0)).otherwise(lit(0.0)).as("pr")),
+        iters) { (prob, _) =>
       val folded = normV
         .join(prob.withColumnRenamed("node", "dst"), Seq("vt", "dst"))
         .withColumn("cl", round(round(col("p") * col("pr"), 9) * 1e9, 0).cast("long"))
         .groupBy(col("vt"), col("src").as("node"))
         .agg(round(sum(col("cl")) / 1e9, 9).as("v"))
-      val prev = prob
-      prob = nodesV.join(folded, Seq("vt", "node"), "left")
+      nodesV.join(folded, Seq("vt", "node"), "left")
         .select(col("vt"), col("node"),
           when(col("node") === target, lit(1.0))
             .otherwise(coalesce(col("v"), lit(0.0))).as("pr"))
-        .localCheckpoint()
-      unpersistBacking(prev)
     }
     // start-mix conversion per variant — the conv(...) fold keyed by vt
     val convAll = prob.join(share, Seq("node"))
@@ -1528,7 +1447,7 @@ object Graph {
       .groupBy(col("vt"))
       .agg(round(sum(col("cl")) / 1e9, 9).as("conv"))
       .localCheckpoint()
-    unpersistBacking(prob)
+    Rounds.release(prob)
     val convFull = convAll.where(col("vt") === "").select(col("conv"))
     val perChannel = convAll.where(col("vt") =!= "")
       .select(col("vt").as("channel"), col("conv").as("conv_removed"))
@@ -1546,11 +1465,7 @@ object Graph {
           round(greatest(col("removal_effect"), lit(0.0)) / col("eff_tot"), 6))
           .as("attribution"))
       .localCheckpoint()
-    unpersistBacking(norm)
-    unpersistBacking(nodes)
-    unpersistBacking(share)
-    unpersistBacking(convAll)
-    unpersistBacking(eff)
+    Rounds.release(norm, nodes, share, convAll, eff)
     out
   }
 
@@ -1619,8 +1534,7 @@ object Graph {
         .as("q_modularity"))
     val out = contrib.crossJoin(broadcast(q)) // 1-row scalar
       .localCheckpoint()
-    unpersistBacking(und)
-    unpersistBacking(contrib)
+    Rounds.release(und, contrib)
     out
   }
 
@@ -1771,27 +1685,14 @@ object Graph {
       .join(broadcast(alive.withColumnRenamed("node", "dst")), Seq("dst"),
         "left_semi")
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-    var alive = und.select(col("src").as("node")).distinct()
-    for (_ <- 1 to iters) {
-      val next = coreDeg(alive).where(col("deg") >= k).select("node")
-      val prev = alive
-      alive = next.localCheckpoint()
-      unpersistBacking(prev)
-    }
-    val out = coreDeg(alive)
-      .select(col("node"), col("deg").as("core_deg"))
-      .localCheckpoint()
-    unpersistBacking(alive)
+    val alive = Rounds.iterate(und.select(col("src").as("node")).distinct(), iters)(
+      (alive, _) => coreDeg(alive).where(col("deg") >= k).select("node"))
+    val out = Rounds.materialize(coreDeg(alive)
+      .select(col("node"), col("deg").as("core_deg")))
+    Rounds.release(alive)
     und.unpersist(blocking = false)
     out
   }
-
-  private[operators] def unpersistBacking(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Deterministic weighted random walks — the node2vec/DeepWalk
     * corpus generator: `walksPerNode` walks of `length` steps start
@@ -1853,7 +1754,7 @@ object Graph {
         .select(col("walk_id"), lit(i.toLong).as("step"), col("cur").as("node"))
     }
     val out = slices.reduce(_ unionByName _).localCheckpoint()
-    states.foreach(unpersistBacking)
+    Rounds.release(states.toSeq: _*)
     ce.unpersist(blocking = false)
     out
   }
@@ -2111,11 +2012,7 @@ object Graph {
     mergedDeg.write.mode("overwrite").parquet(s"${path}_degrees")
     // the _stats overwrite recreates its _SUCCESS — the commit point
     mergedStats.write.mode("overwrite").parquet(s"${path}_stats")
-    unpersistBacking(dPairs)
-    unpersistBacking(oldAffected)
-    unpersistBacking(merged)
-    unpersistBacking(mergedDeg)
-    unpersistBacking(mergedStats)
+    Rounds.release(dPairs, oldAffected, merged, mergedDeg, mergedStats)
     } finally { // a failed stage must not leak the cached blocks
       p.unpersist(blocking = false)
       e.unpersist(blocking = false)
@@ -2187,16 +2084,14 @@ object Graph {
         .join(s.select(col("x").as("y"), col("y").as("z")), Seq("y", "z"))
         .groupBy("x", "y").agg(count(lit(1)).as("sup"))
     }
-    var e = spark.read.parquet(s"${path}_pairs")
+    val e0 = spark.read.parquet(s"${path}_pairs")
       .where(col("n_common") >= minSupport)
       .select(col("item_a").as("x"), col("item_b").as("y"))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val prev = e
-      e = e.join(support(e), Seq("x", "y"), "left")
+    val e = Rounds.iterate(e0, rounds) { (e, _) =>
+      e.join(support(e), Seq("x", "y"), "left")
         .where(coalesce(col("sup"), lit(0L)) >= k - 2)
-        .select("x", "y").localCheckpoint()
-      unpersistBacking(prev)
+        .select("x", "y")
     }
     e.join(support(e), Seq("x", "y"), "left")
       .select(col("x").as("item_a"), col("y").as("item_b"),
@@ -2349,7 +2244,7 @@ object Graph {
       .dropDuplicates("src", "dst")
       .persist()
     val nodes = und.select(col("src").as("node")).distinct()
-    var reach = und.select(col("src").as("node"), col("dst").as("m"))
+    val reach1 = und.select(col("src").as("node"), col("dst").as("m"))
       .union(nodes.select(col("node"), col("node").as("m")))
       .distinct()
       .localCheckpoint()
@@ -2359,18 +2254,16 @@ object Graph {
     def countOf(h: Long, r: DataFrame) =
       r.agg(count(lit(1)).as("n_pairs"))
         .select(lit(h).as("hop"), col("n_pairs")).localCheckpoint()
-    val counts = scala.collection.mutable.ArrayBuffer(countOf(1L, reach))
-    for (h <- 2 to maxHops) {
-      val prev = reach
-      reach = und.join(prev.withColumnRenamed("node", "dst"), Seq("dst"))
+    val counts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val reach = Rounds.iterate(reach1, maxHops - 1) { (prev, h) =>
+      counts += countOf(h.toLong, prev) // round h extends hop h's balls
+      und.join(prev.withColumnRenamed("node", "dst"), Seq("dst"))
         .select(col("src").as("node"), col("m"))
         .union(prev)
         .distinct()
-        .localCheckpoint()
-      unpersistBacking(prev)
-      counts += countOf(h.toLong, reach)
     }
-    unpersistBacking(reach)
+    counts += countOf(maxHops.toLong, reach)
+    Rounds.release(reach)
     und.unpersist(blocking = false)
     val curve = counts.reduce(_ unionByName _) // ≤maxHops 1-row checkpoints
     val last = curve.where(col("hop") === maxHops)
@@ -2399,35 +2292,34 @@ object Graph {
     * an exact ×1e9 long between rounds, final score one division
     * rounded 6. One join + one node aggregate per round on the
     * bounded state (eager checkpoint, the pageRank discipline).
+    *
+    * Input bound: `edges` is checkpointed eagerly, when the call is
+    * made, so it must be a bounded transition table (every registry
+    * caller passes ≤ |types|² rows); an unbounded edge stream would
+    * be materialized whole before round 1.
     */
   def katzCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                      weightCol: String, beta: Double, iters: Int): DataFrame = {
     require(beta > 0 && beta < 1 && iters >= 1, s"bad katz params: $beta/$iters")
     val (norm, nodes) = normalizedTransitions(edges, srcCol, dstCol, weightCol)
-    var state = nodes
+    val state0 = nodes
       .select(col("node"), lit(1.0).as("w"), lit(0L).as("c9"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
+    val state = Rounds.iterate(state0, iters) { (state, _) =>
       val flowed = norm
         .join(state.select(col("node").as("src"), col("w")), "src")
         .groupBy(col("dst").as("node"))
         .agg(round(lit(beta) * sum(round(round(col("p") * col("w"), 9) * 1e9, 0)
           .cast("long")) / 1e9, 9).as("w_next"))
-      val prev = state
-      state = state.join(flowed, Seq("node"), "left")
+      state.join(flowed, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("w_next"), lit(0.0)).as("w"),
           (col("c9") + round(coalesce(col("w_next"), lit(0.0)) * 1e9, 0)
             .cast("long")).as("c9"))
-        .localCheckpoint()
-      unpersistBacking(prev)
     }
-    val out = state
-      .select(col("node"), round(col("c9") / 1e9, 6).as("katz"))
-      .localCheckpoint()
-    unpersistBacking(state)
-    unpersistBacking(norm)
-    unpersistBacking(nodes)
+    val out = Rounds.materialize(state
+      .select(col("node"), round(col("c9") / 1e9, 6).as("katz")))
+    Rounds.release(state, norm, nodes)
     out
   }
 

@@ -673,12 +673,12 @@ object Sampling {
       col("target").cast("long").as("ta")))
     val tB = broadcast(targetB.select(col(dimB).as("b"),
       col("target").cast("long").as("tb")))
-    var cells = sample.groupBy(col(dimA).as("a"), col(dimB).as("b"))
+    val cells0 = sample.groupBy(col(dimA).as("a"), col(dimB).as("b"))
       .agg(count(lit(1)).as("n"))
       .join(tA, "a").join(tB, "b")
       .withColumn("w9", lit(1000000000L))
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val cells = Rounds.iterate(cells0, rounds) { (cells, _) =>
       val mA = cells.groupBy("a")
         .agg(sum(col("n") * col("w9")).as("ma")) // exact long margin
       val stepA = cells.join(mA, "a")
@@ -688,21 +688,17 @@ object Sampling {
         .drop("ma")
       val mB = stepA.groupBy("b")
         .agg(sum(col("n") * col("w9")).as("mb"))
-      val prev = cells
-      cells = stepA.join(mB, "b")
+      stepA.join(mB, "b")
         .withColumn("w9",
           round(d(col("w9")) * d(col("tb")) * 1e9 / d(col("mb")), 0)
             .cast("long"))
         .drop("mb")
-        .localCheckpoint()
-      Graph.unpersistBacking(prev)
     }
-    val out = cells.select(col("a"), col("b"), col("n").as("n_cell"),
+    val out = Rounds.materialize(cells.select(col("a"), col("b"), col("n").as("n_cell"),
         col("ta").as("target_a"), col("tb").as("target_b"),
         round(d(col("w9")) / 1e9, 9).as("weight"),
-        round(d(col("n") * col("w9")) / 1e9, 6).as("weighted_n"))
-      .localCheckpoint()
-    Graph.unpersistBacking(cells)
+        round(d(col("n") * col("w9")) / 1e9, 6).as("weighted_n")))
+    Rounds.release(cells)
     out
   }
 

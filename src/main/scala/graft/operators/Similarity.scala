@@ -550,6 +550,7 @@ object Similarity {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("nrm", l2Norm(col("vec")))
     var centroids = seedCentroids(c, "id", numCells)
+    var cut = centroids // the last materialized centroid table
     var means: DataFrame = null
     var it = 0
     for (_ <- 0 until iters) {
@@ -557,7 +558,11 @@ object Similarity {
       means = m
       centroids = next
       it += 1
-      if (it % checkpointEvery == 0 && it < iters) centroids = centroids.localCheckpoint()
+      if (it % checkpointEvery == 0 && it < iters) {
+        centroids = Rounds.materialize(centroids)
+        Rounds.release(cut) // read only by the chain just materialized
+        cut = centroids
+      }
     }
     means
   }
@@ -604,13 +609,14 @@ object Similarity {
           col("na"), col("nb")), 6) * 1e6, 0).cast("long").as("sim6"))
       .localCheckpoint()
     val w = Window.partitionBy("query_id").orderBy(desc("mmr_i"), asc("corpus_id"))
-    var selected = cand
+    val top = cand
       .withColumn("mmr_i", lit(lambdaTenths.toLong) * col("rel6"))
       .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
       .select(col("query_id"), col("corpus_id"), lit(1L).as("rnk"),
         col("rel"), col("mmr_i"))
       .localCheckpoint()
-    for (j <- 2 to k) {
+    val selected = Rounds.iterate(top, k - 1) { (selected, i) =>
+      val j = i + 1 // round i picks rank j
       val div = sims
         .join(selected.select(col("query_id"), col("corpus_id").as("b")),
           Seq("query_id", "b"))
@@ -626,7 +632,7 @@ object Similarity {
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("query_id"), col("corpus_id"), lit(j.toLong).as("rnk"),
           col("rel"), col("mmr_i"))
-      selected = selected.union(pick).localCheckpoint()
+      selected.union(pick)
     }
     selected.select(col("query_id"), col("corpus_id"), col("rnk"), col("rel"),
       (col("mmr_i") / 1e7).as("mmr"))
@@ -750,9 +756,8 @@ object Similarity {
       .withColumn("h", graft.functions.TextFunctions.md5Prefix64(col("id").cast("string")))
       .orderBy("h").limit(1)
       .select("id", "vec", "nrm")
-    var cand = firstCenter.localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val d = c.join(broadcast(cand.select(col("vec").as("cvec"), col("nrm").as("cnrm"))),
+    val cand = Rounds.iterate(firstCenter.localCheckpoint(), rounds) { (prev, _) =>
+      val d = c.join(broadcast(prev.select(col("vec").as("cvec"), col("nrm").as("cnrm"))),
           lit(true))
         .withColumn("csim", round(
           cosineFromParts(dot(col("vec"), col("cvec")), col("nrm"), col("cnrm")), 6))
@@ -764,9 +769,7 @@ object Similarity {
       val drawn = d.crossJoin(broadcast(tot))
         .where(md5u * col("D") < lit(l.toDouble) * col("dl"))
         .select("id", "vec", "nrm")
-      val prev = cand
-      cand = prev.unionByName(drawn).localCheckpoint()
-      Graph.unpersistBacking(prev)
+      prev.unionByName(drawn)
     }
     val weights = c.join(broadcast(
         cand.select(col("id").as("cand_id"), col("vec").as("cvec"),
@@ -1280,9 +1283,7 @@ object Similarity {
       if (fs.exists(dir)) fs.delete(dir, true)
     }
     fs.create(marker, true).close() // commit: index consistent again
-    Graph.unpersistBacking(dCells)
-    Graph.unpersistBacking(oldAffected)
-    Graph.unpersistBacking(merged)
+    Rounds.release(dCells, oldAffected, merged)
   }
 
   /** ANN top-k against a materialized [[writeIvfIndex]] index: rank
@@ -1614,34 +1615,28 @@ object Similarity {
         col(labelCol).cast("long").as("label_true"),
         (col(idCol) % seedMod === 0).as("is_seed"))
       .localCheckpoint()
-    var state = base.select(col("id"),
-      when(col("is_seed"), col("label_true")).as("lab"))
-    for (_ <- 1 to rounds) {
+    val state = Rounds.iterate(base.select(col("id"),
+        when(col("is_seed"), col("label_true")).as("lab")), rounds) { (prev, _) =>
       val win = edges
-        .join(state.where(col("lab").isNotNull)
+        .join(prev.where(col("lab").isNotNull)
           .select(col("id").as("v"), col("lab")), "v")
         .groupBy(col("u"), col("lab")).agg(count(lit(1)).as("n"))
         .groupBy(col("u"))
         .agg(max(struct(col("n"), (-col("lab")).as("neg"),
           col("lab").as("l"))).as("t"))
         .select(col("u").as("id"), col("t.l").as("vote"))
-      val prev = state
-      state = base
+      base
         .join(prev.select(col("id"), col("lab").as("old")), "id")
         .join(win, Seq("id"), "left")
         .select(col("id"), when(col("is_seed"), col("label_true"))
           .otherwise(coalesce(col("vote"), col("old"))).as("lab"))
-        .localCheckpoint()
-      graft.operators.Graph.unpersistBacking(prev)
     }
-    val out = base.join(state, "id")
+    val out = Rounds.materialize(base.join(state, "id")
       .select(col("id").as("vec_id"), col("label_true"), col("is_seed"),
         col("lab").as("label_pred"),
         when(!col("is_seed") && col("lab").isNotNull,
-          col("lab") === col("label_true")).as("correct"))
-      .localCheckpoint()
-    graft.operators.Graph.unpersistBacking(state)
-    graft.operators.Graph.unpersistBacking(base)
+          col("lab") === col("label_true")).as("correct")))
+    Rounds.release(state, base)
     edges.unpersist(blocking = false)
     out
   }
@@ -1858,17 +1853,18 @@ object Similarity {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("nrm", l2Norm(col("vec")))
       .localCheckpoint() // re-joined every round — scan once
-    var chosen = c
+    val seed = c
       .withColumn("h", graft.functions.TextFunctions.md5Prefix64(col("id").cast("string")))
       .orderBy("h").limit(1)
       .select(lit(1L).as("rnk"), col("id"), col("vec"), col("nrm"),
               lit(null).cast("double").as("radius"))
       .localCheckpoint()
-    for (r <- 2 to k) {
+    val chosen = Rounds.iterate(seed, k - 1) { (prev, i) =>
+      val r = i + 1 // round i picks center r
       val win = c
-        .join(broadcast(chosen.select(col("id").as("cid"))), col("id") === col("cid"),
+        .join(broadcast(prev.select(col("id").as("cid"))), col("id") === col("cid"),
           "left_anti")
-        .join(broadcast(chosen.select(col("vec").as("cvec"), col("nrm").as("cnrm"))),
+        .join(broadcast(prev.select(col("vec").as("cvec"), col("nrm").as("cnrm"))),
           lit(true))
         .withColumn("csim", round(
           cosineFromParts(dot(col("vec"), col("cvec")), col("nrm"), col("cnrm")), 6))
@@ -1879,9 +1875,7 @@ object Similarity {
         .orderBy(desc("radius"), desc("id")).limit(1)
         .select(lit(r.toLong).as("rnk"), col("id"), col("vec"), col("nrm"),
                 col("radius"))
-      val prev = chosen
-      chosen = prev.unionByName(win).localCheckpoint()
-      Graph.unpersistBacking(prev)
+      prev.unionByName(win)
     }
     chosen.select(col("rnk"), col("id").as("center_id"), col("radius"))
   }
@@ -2132,8 +2126,9 @@ object Similarity {
       .select(col("pa"), col("pb"),
         round(lit(1.0) - cosine(col("va"), col("vb")), 6).as("dist"))
       .localCheckpoint()
-    var m = pts.select(col("p"), col("p").as("c")).localCheckpoint()
-    val logs = (1 to rounds).map { r =>
+    val logs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val merged = Rounds.iterate(pts.select(col("p"), col("p").as("c")).localCheckpoint(),
+        rounds) { (m, r) =>
       val cd = pd
         .join(m.select(col("p").as("pa"), col("c").as("ca0")), "pa")
         .join(m.select(col("p").as("pb"), col("c").as("cb0")), "pb")
@@ -2142,15 +2137,13 @@ object Similarity {
           greatest(col("ca0"), col("cb0")).as("cb"))
         .agg(min(col("dist")).as("dist"))
       val pick = cd.orderBy("dist", "ca", "cb").limit(1).localCheckpoint()
-      val prev = m
-      val pk = pick.select(col("ca"), col("cb"))
-      m = m.join(broadcast(pk), m("c") === pk("cb"), "left")
-        .select(col("p"), coalesce(col("ca"), col("c")).as("c"))
-        .localCheckpoint()
-      Graph.unpersistBacking(prev)
-      pick.select(lit(r.toLong).as("step"), col("ca").as("cluster_a"),
+      logs += pick.select(lit(r.toLong).as("step"), col("ca").as("cluster_a"),
         col("cb").as("cluster_b"), col("dist"))
+      val pk = pick.select(col("ca"), col("cb"))
+      m.join(broadcast(pk), m("c") === pk("cb"), "left")
+        .select(col("p"), coalesce(col("ca"), col("c")).as("c"))
     }
+    Rounds.release(merged) // the merge log reads only the picks
     logs.reduce(_ unionByName _)
       .withColumn("n_clusters", lit(n) - col("step"))
   }

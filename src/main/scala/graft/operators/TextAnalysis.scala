@@ -610,9 +610,7 @@ object TextAnalysis {
     }
     // the _stats overwrite recreates its _SUCCESS — the commit point
     writeBm25SideTables(spark, path)
-    Graph.unpersistBacking(tfNew)
-    Graph.unpersistBacking(oldAffected)
-    Graph.unpersistBacking(merged)
+    Rounds.release(tfNew, oldAffected, merged)
   }
 
   /** Re-derive `_dl` / `_stats` from the written postings (dl ≡ Σ tf
