@@ -392,17 +392,13 @@ object Embeddings {
   def topPrincipalComponents(emb: DataFrame, idCol: String, vecCol: String,
                              nComponents: Int = 3, iters: Int = 8,
                              scale: Long = 10000L): DataFrame = {
-    require(nComponents >= 1, s"nComponents must be >= 1: $nComponents")
+    var cov = covarianceMatrix(emb, idCol, vecCol, scale)
     val comps = Seq.newBuilder[DataFrame]
-    // the d-row component vectors, released at the end: each one feeds
-    // the deflation that lands after its component
-    val vs = Seq.newBuilder[DataFrame]
-    def component(cov: DataFrame, m: Int): (DataFrame, DataFrame) = {
+    for (m <- 1 to nComponents) {
       // dims re-derived from the CURRENT residual (each checkpointed):
       // earlier residuals' blocks are released, so no lineage may
       // reach back through them
       val v = powerIterate(cov, iters)
-      vs += v
       val wf = cov.join(v, "j").groupBy(col("i"))
         .agg(sum(col("c") * col("x")).as("w"))
       val lam = wf.agg(round(sqrt(sum(col("w") * col("w"))), 9).as("lam"))
@@ -411,20 +407,19 @@ object Embeddings {
                 round(col("x"), 6).as("loading"),
                 round(col("lam"), 6).as("eigenvalue"))
         .localCheckpoint()
-      (v, lam)
+      if (m < nComponents) {
+        val prevCov = cov
+        cov = Rounds.materialize(cov
+          .join(v.select(col("j").as("i"), col("x").as("xi")), "i")
+          .join(v.select(col("j"), col("x").as("xj")), "j")
+          .crossJoin(broadcast(lam))
+          .select(col("i"), col("j"),
+            round(col("c") - col("lam") * col("xi") * col("xj"), 12).as("c")))
+        Rounds.release(prevCov)
+      }
+      Rounds.release(v)
     }
-    val residual = Rounds.iterate(covarianceMatrix(emb, idCol, vecCol, scale),
-        nComponents - 1) { (cov, m) =>
-      val (v, lam) = component(cov, m)
-      cov
-        .join(v.select(col("j").as("i"), col("x").as("xi")), "i")
-        .join(v.select(col("j"), col("x").as("xj")), "j")
-        .crossJoin(broadcast(lam))
-        .select(col("i"), col("j"),
-          round(col("c") - col("lam") * col("xi") * col("xj"), 12).as("c"))
-    }
-    component(residual, nComponents)
-    Rounds.release(residual +: vs.result(): _*)
+    Rounds.release(cov)
     comps.result().reduce(_ unionByName _)
   }
 

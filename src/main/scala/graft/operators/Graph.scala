@@ -247,30 +247,32 @@ object Graph {
       .distinct()
       .persist()
     val nRow = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
-    // a lazy placeholder until round 1's authorities land
-    var auths = nodes.select(col("node"), lit(0.0).as("auth")).limit(0)
+    var hubs = nodes.crossJoin(broadcast(nRow))
+      .select(col("node"), round(lit(1.0) / col("n_nodes"), 9).as("hub"))
+    var auths: DataFrame = null
     // per-HALF-round eager checkpoints (fusing the two half-rounds
     // under one checkpoint measured ~20% slower at sf0.1 — see
-    // pageRank's round-8 note): the authority half materializes in
-    // the step, the hub half is the round's state
-    val hubs = Rounds.iterate(nodes.crossJoin(broadcast(nRow))
-        .select(col("node"), round(lit(1.0) / col("n_nodes"), 9).as("hub")), iters) {
-      (h, _) =>
-        Rounds.release(auths)
-        val aRaw = e.join(h.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node")).agg(sum(col("hub") * col("w")).as("raw"))
-        val aTot = aRaw.agg(sum(col("raw")).as("tot"))
-        auths = Rounds.materialize(nodes.join(aRaw, Seq("node"), "left")
-          .crossJoin(broadcast(aTot))
-          .select(col("node"),
-            round(coalesce(col("raw"), lit(0.0)) / col("tot"), 9).as("auth")))
-        val hRaw = e.join(auths.withColumnRenamed("node", "dst"), "dst")
-          .groupBy(col("src").as("node")).agg(sum(col("auth") * col("w")).as("raw"))
-        val hTot = hRaw.agg(sum(col("raw")).as("tot"))
-        nodes.join(hRaw, Seq("node"), "left")
-          .crossJoin(broadcast(hTot))
-          .select(col("node"),
-            round(coalesce(col("raw"), lit(0.0)) / col("tot"), 9).as("hub"))
+    // pageRank's round-8 note); two states per round, so this loop
+    // calls materialize/release itself instead of Rounds.iterate
+    for (_ <- 1 to iters) {
+      val prevH = hubs
+      val prevA = auths
+      val aRaw = e.join(hubs.withColumnRenamed("node", "src"), "src")
+        .groupBy(col("dst").as("node")).agg(sum(col("hub") * col("w")).as("raw"))
+      val aTot = aRaw.agg(sum(col("raw")).as("tot"))
+      auths = Rounds.materialize(nodes.join(aRaw, Seq("node"), "left")
+        .crossJoin(broadcast(aTot))
+        .select(col("node"),
+          round(coalesce(col("raw"), lit(0.0)) / col("tot"), 9).as("auth")))
+      val hRaw = e.join(auths.withColumnRenamed("node", "dst"), "dst")
+        .groupBy(col("src").as("node")).agg(sum(col("auth") * col("w")).as("raw"))
+      val hTot = hRaw.agg(sum(col("raw")).as("tot"))
+      hubs = Rounds.materialize(nodes.join(hRaw, Seq("node"), "left")
+        .crossJoin(broadcast(hTot))
+        .select(col("node"),
+          round(coalesce(col("raw"), lit(0.0)) / col("tot"), 9).as("hub")))
+      Rounds.release(prevH)
+      if (prevA != null) Rounds.release(prevA)
     }
     // same discipline as pageRank's exit: materialize the final join
     // eagerly, then drop both score checkpoints and the cached sides

@@ -54,21 +54,21 @@ object Rounds {
   }
 
   /** Run `rounds` rounds of `step` (given the state and the 1-based
-    * round) from `init`, materializing every round's state. The
-    * previous state is released only after the next one has landed:
-    * the next round's computation reads it. `init` is released like
-    * any other state, so a caller passes a materialized `init` only
-    * when nothing else reads it afterwards. A step that returns the
-    * state it was given ends the iteration there (a drained graph).
+    * round) from `init`, materializing every round's state with a
+    * `localCheckpoint`. The previous state is released only after the
+    * next one has landed: the next round's computation reads it.
+    * `init` is released like any other state, so a caller passes a
+    * materialized `init` only when nothing else reads it afterwards. A
+    * step that returns the state it was given ends the iteration there
+    * (a drained graph).
     */
-  def iterate(init: DataFrame, rounds: Int, checkpointDir: Option[String] = None)
-             (step: (DataFrame, Int) => DataFrame): DataFrame = {
+  def iterate(init: DataFrame, rounds: Int)(step: (DataFrame, Int) => DataFrame): DataFrame = {
     var state = init
     var r = 1
     while (r <= rounds) {
       val next = step(state, r)
       if (next eq state) return state
-      val landed = materialize(next, checkpointDir)
+      val landed = materialize(next)
       release(state)
       state = landed
       r += 1

@@ -71,24 +71,34 @@ class RoundsSpec extends SparkSpec {
     Rounds.release(out)
   }
 
-  test("checkpointDir mode deletes each round's checkpoint once the next lands") {
+  test("checkpointDir mode: release deletes a round's checkpoint; starEdges leaves only its result's") {
     val dir = java.nio.file.Files.createTempDirectory("graft_rounds").toString
-    def rddDirs(): Seq[String] = {
-      val root = new java.io.File(dir)
+    def rddDirs(): Set[String] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      walk(root).filter(f => f.isDirectory && f.getName.startsWith("rdd-")).map(_.getPath)
+      walk(new java.io.File(dir))
+        .filter(f => f.isDirectory && f.getName.startsWith("rdd-")).map(_.getPath).toSet
     }
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    val out = Rounds.iterate(spark.range(0, 20).toDF("x"), 4, Some(dir)) { (s, r) =>
-      seen ++= rddDirs()
-      s.select((col("x") * 2 + r).as("x"))
-    }
-    val left = rddDirs()
-    assert(seen.size == 3, seen) // rounds 1–3 each landed one checkpoint
-    assert(left.size == 1 && !seen.contains(left.head), s"$left vs $seen")
-    assert(out.count() == 20)
-    Rounds.release(out)
+    // one round by hand: the next state lands, then the previous is released
+    val first = Rounds.materialize(spark.range(0, 20).toDF("x"), Some(dir))
+    val firstDirs = rddDirs()
+    assert(firstDirs.size == 1, firstDirs)
+    val second = Rounds.materialize(first.select((col("x") * 2).as("x")), Some(dir))
+    assert(rddDirs().size == 2)
+    Rounds.release(first)
+    val secondDirs = rddDirs()
+    assert(secondDirs.size == 1 && (secondDirs & firstDirs).isEmpty, s"$secondDirs vs $firstDirs")
+    assert(second.agg(sum("x")).head().getLong(0) == 2 * (0 until 20).sum)
+    Rounds.release(second)
+    assert(rddDirs().isEmpty)
+    // the reliable-checkpoint loop: a 16-chain takes several rounds, and
+    // only the converged edge set's checkpoint is left on disk
+    val chain = (1L until 16L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val (stars, rounds) = Dedup.starEdges(chain, Some(dir))
+    assert(rounds >= 2, s"$rounds rounds")
+    assert(rddDirs().size == 1, rddDirs())
+    assert(stars.count() == 15)
+    Rounds.release(stars)
     assert(rddDirs().isEmpty)
   }
 
