@@ -33,7 +33,10 @@ object PlanAudit {
                // round-10 surface
                "odata_agg_pushdown", "join_spatial_overlap",
                "join_spatial_knn", "etl_packed_roundtrip",
-               "profile_roc_stream")
+               "profile_roc_stream",
+               // the MinHash family: one shingling pass per corpus, one
+               // band-key kernel, posting-list candidates
+               "dedup_minhash", "dedup_cross", "dedup_lsh_calibration")
     for (name <- names) {
       println(s"================ $name ================")
       println(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(

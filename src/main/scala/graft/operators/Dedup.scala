@@ -15,8 +15,10 @@ import graft.functions.VectorFunctions._
   * the Jaccard inverted index caps posting lists with `maxDocFreq`
   * (observable df-cut — see [[jaccardPairs]]); the MinHash/SimHash
   * band keys derive from 60-bit signatures, so a hot band means a
-  * genuine near-dup clique (the quadratic cost IS the answer's size)
-  * and AQE skew-join spreads moderate residual skew at runtime.
+  * genuine near-dup clique (the quadratic cost IS the answer's size).
+  * MinHash pairs come from one posting list per (band, key); the
+  * SimHash band self-join leaves moderate residual skew to AQE's
+  * skew-join at runtime.
   */
 object Dedup {
 
@@ -199,115 +201,103 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** Modulus for the MinHash permutation family: the Mersenne prime
-    * 2^31−1. Values stay below 2^31, so an affine a·h+b never exceeds
-    * ~2^62 — no ANSI long overflow — and the identical arithmetic runs
-    * in plain SQL, which is what lets [[minHashPairs]] carry a FULL
-    * DuckDB oracle (the oracle reproduces the banding, so both engines
-    * compute the same candidate set by construction, not by recall
-    * luck).
+  /** Modulus of the MinHash permutation family, the Mersenne prime
+    * 2^31−1 ([[graft.plans.MinHashBandKeys.P]]). The identical
+    * arithmetic runs in plain SQL, which is what lets [[minHashPairs]]
+    * carry a FULL DuckDB oracle (the oracle reproduces the banding, so
+    * both engines compute the same candidate set by construction, not
+    * by recall luck).
     */
-  private[graft] val MinHashP: Long = 2147483647L
+  private[graft] val MinHashP: Long = graft.plans.MinHashBandKeys.P
 
-  /** Affine-permutation multipliers/offsets over mod-[[MinHashP]],
-    * fixed at plan time from a seeded LCG: a ∈ [1, p−1], b ∈ [0, p−1].
+  /** Affine-permutation multipliers/offsets over mod-[[MinHashP]]
+    * ([[graft.plans.MinHashBandKeys.consts]]).
     */
-  private[graft] def minHashConsts(n: Int, seed: Long): IndexedSeq[(Long, Long)] = {
-    var x = seed
-    def next(): Long = { x = x * 6364136223846793005L + 1442695040888963407L; x }
-    IndexedSeq.fill(n)((
-      java.lang.Math.floorMod(next(), MinHashP - 1) + 1,
-      java.lang.Math.floorMod(next(), MinHashP)))
-  }
+  private[graft] def minHashConsts(n: Int, seed: Long): IndexedSeq[(Long, Long)] =
+    graft.plans.MinHashBandKeys.consts(n, seed)
 
-  /** MinHash signature from a pre-hashed shingle column (one md5 per
-    * shingle — the expensive string hash — paid once by the caller;
-    * pass `h mod anything ≥ 2^31` or the raw 60-bit hash). The k
-    * permutations are affine maps mod the prime 2^31−1 — a multiply,
-    * add, and mod per element, cheaper than a re-hash and
-    * reproducible in any SQL engine. Pure column expressions, no ML
-    * fitting, no driver state — a doc's signature is computable in
-    * isolation, so this runs identically in batch and streaming.
-    *
-    * `hashes` must reference a materialized column (withColumn), not
-    * an inline expression — it is referenced numHashes times and HOFs
-    * get no common-subexpression elimination.
+  /** MinHash signature from a pre-hashed shingle column: the
+    * numHashes permutation mins of the native kernel
+    * (graft.plans.MinHashBandKeys) with one row per band — a
+    * one-row band key is the min itself. Raw xxhash64 values are fine
+    * (the kernel reduces them with pmod). Pure column expression, no
+    * driver state — a doc's signature is computable in isolation, so
+    * this runs identically in batch and streaming. An array with no
+    * hash gives an empty signature; a null array gives null.
     */
-  def minHashSignature(hashes: Column, numHashes: Int): Column = {
-    val consts = minHashConsts(numHashes, seed = 42L)
-    // pmod, not %: a caller passing raw xxhash64 values (negative half
-    // the time) must still land in [0, p) or the affine permutation
-    // family silently breaks
-    array(consts.map { case (a, b) =>
-      array_min(transform(hashes, h => (lit(a) * pmod(h, lit(MinHashP)) + lit(b)) % MinHashP))
-    }: _*)
-  }
+  def minHashSignature(hashes: Column, numHashes: Int): Column =
+    minHashBandKeys(hashes, numHashes, 1)
+
+  private def minHashBandKeys(hashes: Column, numBands: Int, rowsPerBand: Int): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.MinHashBandKeys(
+      org.apache.spark.sql.graft.ColumnBridge.expression(hashes), numBands, rowsPerBand))
 
   /** MinHash + LSH banding near-dup pairs (the scale path).
     *
-    * signature (numBands·rowsPerBand mins) → band keys (arithmetic
-    * fold of each band's slice) → explode → self-join on (band, key) →
-    * distinct candidate pairs → exact Jaccard verification on
-    * candidates only. P(candidate | J=s) = 1 − (1 − s^r)^b; with the
-    * 16×4 defaults that is ≈0.89 at J=0.6 and ≈1 at J≥0.9 — recall is
-    * structural only well above the banding design point. The DuckDB
-    * oracle therefore REPLAYS the banding (same hashes, same
-    * permutations, same band keys) instead of assuming recall=1
-    * against exact Jaccard.
+    * per document: shingle hashes → band keys (one native kernel:
+    * numBands·rowsPerBand permutation mins, each band's slice folded to
+    * one key) → (band, key) posting lists → candidate pairs → exact
+    * Jaccard verification on candidates only. P(candidate | J=s) =
+    * 1 − (1 − s^r)^b; with the 16×4 defaults that is ≈0.89 at J=0.6
+    * and ≈1 at J≥0.9 — recall is structural only well above the
+    * banding design point. The DuckDB oracle therefore REPLAYS the
+    * banding (same hashes, same permutations, same band keys) instead
+    * of assuming recall=1 against exact Jaccard.
     *
-    * Every stage is a narrow map or a bucket-key join; the candidate
-    * set (not the corpus) pays the quadratic cost.
+    * The corpus is shingled once, in a narrow per-document projection
+    * with no aggregate; the posting-list aggregate shuffles 8-byte keys
+    * and ids. Verification shingles again only the documents that
+    * appear in a candidate pair (a semi-join on their ids), so the
+    * candidate set, not the corpus, pays the intersection cost.
+    * `idCol` must be a key of `docs`.
     */
   def minHashPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, numBands: Int = 16, rowsPerBand: Int = 4,
                    threshold: Double = 0.6,
                    engineNeutralHash: Boolean = true): DataFrame = {
-    val docTable = minHashDocTable(docs, idCol, textCol, shingleN,
-      numBands * rowsPerBand, engineNeutralHash)
-    val shingleTable = docTable.select(col("doc"), col("sh"))
-    val banded = bandKeyTable(docTable, numBands, rowsPerBand)
-
-    val candidates = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-
+    def docTable(d: DataFrame) = minHashDocTable(d, idCol, textCol, shingleN, engineNeutralHash)
+    val candidates = bucketPairs(bandKeyTable(docTable(docs), numBands, rowsPerBand))
+    val ids = candidates.select(explode(array(col("doc_a"), col("doc_b"))).as(idCol))
+    // the exchange materializes the candidate docs' shingles once for
+    // both sides of every pair, and gives AQE their size to plan by
+    val shingleTable = docTable(docs.join(ids, Seq(idCol), "left_semi"))
+      .repartition(col("doc"))
     verifyJaccard(candidates, shingleTable, shingleTable, threshold)
   }
 
   /** Cross-corpus MinHash contamination report: near-dup (corpus,
     * probe) pairs — the doc-LEVEL benchmark-decontamination companion
-    * to [[TextAnalysis]]'s n-gram overlap check. Identical signature /
-    * banding / verification machinery as [[minHashPairs]] (the DuckDB
-    * oracle replays it the same way); the only structural difference
-    * is that band keys join ACROSS the two tables instead of
-    * self-joining, so cost is |corpus buckets| ⋈ |probe buckets| —
-    * the probe side (a benchmark) is typically tiny and its banded
-    * table broadcasts. Pairs where both sides carry the same id are
-    * excluded (callers probing a corpus against its own slice).
+    * to [[TextAnalysis]]'s n-gram overlap check. Identical band-key
+    * kernel and verification as [[minHashPairs]] (the DuckDB oracle
+    * replays it the same way); the only structural difference is that
+    * band keys join ACROSS the two tables instead of forming posting
+    * lists, so cost is |corpus buckets| ⋈ |probe buckets| — the probe
+    * side (a benchmark) is typically tiny and its banded table
+    * broadcasts. Each side is shingled once for banding, and again
+    * only for its documents in a candidate pair. Pairs where both
+    * sides carry the same id are excluded (callers probing a corpus
+    * against its own slice).
     */
   def minHashCrossPairs(corpus: DataFrame, probe: DataFrame, idCol: String,
                         textCol: String, shingleN: Int = 3,
                         numBands: Int = 16, rowsPerBand: Int = 4,
                         threshold: Double = 0.6,
                         engineNeutralHash: Boolean = true): DataFrame = {
-    val numHashes = numBands * rowsPerBand
-    val ct = minHashDocTable(corpus, idCol, textCol, shingleN, numHashes, engineNeutralHash)
-    val pt = minHashDocTable(probe, idCol, textCol, shingleN, numHashes, engineNeutralHash)
+    def docTable(d: DataFrame) = minHashDocTable(d, idCol, textCol, shingleN, engineNeutralHash)
     // explicit hint: the probe side is a benchmark (small) by
-    // contract, and auto-broadcast can't size an aggregate+explode
-    // plan reliably — without the hint a mis-estimate shuffles the
-    // full corpus banded table instead
-    val candidates = bandKeyTable(ct, numBands, rowsPerBand).as("a")
-      .join(broadcast(bandKeyTable(pt, numBands, rowsPerBand)).as("b"),
+    // contract, and auto-broadcast can't size a kernel+explode plan
+    // reliably — without the hint a mis-estimate shuffles the full
+    // corpus banded table instead
+    val candidates = bandKeyTable(docTable(corpus), numBands, rowsPerBand).as("a")
+      .join(broadcast(bandKeyTable(docTable(probe), numBands, rowsPerBand)).as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc") =!= col("b.doc"))
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
     verifyJaccard(candidates,
-      ct.select(col("doc"), col("sh")), pt.select(col("doc"), col("sh")), threshold)
+      docTable(corpus.join(candidates.select(col("doc_a").as(idCol)), Seq(idCol), "left_semi")),
+      docTable(probe.join(candidates.select(col("doc_b").as(idCol)), Seq(idCol), "left_semi")),
+      threshold)
   }
 
   /** Exact cross-corpus containment: for every (corpus doc, probe
@@ -380,77 +370,55 @@ object Dedup {
     }
   }
 
-  /** One aggregation pass over the shingle stream producing BOTH the
-    * numHashes signature mins and the verification shingle-set (the
-    * two consumers read the same exchange — ReuseExchange).
+  /** (doc, sh): each document's distinct shingle hashes, one narrow
+    * per-document projection — no aggregate, no shuffle.
     *
-    * One codegen'd regex pass + explode + one codegen'd string hash
-    * per (doc, shingle) — everything downstream (signatures AND
-    * verification sets) derives from these rows, never from
-    * interpreted array HOFs. The default md5 hash (60 bits, like
-    * simhash) keeps the ENTIRE pipeline — permutations, band keys,
-    * verification intersections — engine-neutral, so the DuckDB
-    * oracle replays it exactly; engineNeutralHash=false swaps in
-    * xxhash64 (~2× cheaper string hash, same pipeline, same recall
-    * characteristics) for production callers that don't need a SQL
-    * twin.
+    * One codegen'd regex pass yields the doc's distinct shingles and
+    * each is hashed once. The default md5 hash (60 bits, like simhash)
+    * keeps the ENTIRE pipeline — permutations, band keys, verification
+    * intersections — engine-neutral, so the DuckDB oracle replays it
+    * exactly; engineNeutralHash=false swaps in xxhash64 (~2× cheaper
+    * string hash, same pipeline, same recall characteristics) for
+    * production callers that don't need a SQL twin. The fast path keeps
+    * the RAW 64-bit xxhash64: verification intersects these values, and
+    * reducing them mod 2^31−1 first would raise false-collision odds
+    * from ~2^-64 to ~2^-31 per pair; the band-key kernel reduces them
+    * with pmod itself. The hashes are made distinct (two shingles that
+    * collide count once), so `size(sh)` is the set size verification
+    * divides by. A doc with no shingle has an empty `sh`, hence no
+    * band keys.
     */
   private def minHashDocTable(docs: DataFrame, idCol: String, textCol: String,
-                              shingleN: Int, numHashes: Int,
-                              engineNeutralHash: Boolean): DataFrame = {
-    // the fast path keeps the RAW 64-bit xxhash64 here: the
-    // verification collect_set below intersects these values, and
-    // reducing them mod 2^31−1 first would raise false-collision odds
-    // from ~2^-64 to ~2^-31 per pair (a few per 10^5-shingle doc).
-    // The mod-p reduction happens only inside the permutation min
-    // aggregates, via pmod (xxhash64 is negative half the time).
-    val shingleHash: Column =
-      if (engineNeutralHash) md5Prefix64(col("s"))
-      else xxhash64(col("s"))
-    val tok = docs
-      .select(col(idCol).as("doc"), explode(wordShinglesFast(col(textCol), shingleN)).as("s"))
-      .select(col("doc"), shingleHash.as("h"))
-
-    // ONE aggregation produces both the signature mins and the
-    // verification shingle-set: signatures via numHashes codegen'd MIN
-    // aggregates (the per-row HOF fold stays out of whole-stage
-    // codegen and is ~10× slower), the shingle-set via collect_set of
-    // the 60-bit hashes (verification intersects hashes, not strings —
-    // identical counts short of 2^-60 collisions). Both consumers
-    // below read the same exchange (ReuseExchange), so the corpus is
-    // scanned and shuffled once.
-    val consts = minHashConsts(numHashes, seed = 42L)
-    val minAggs = consts.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * pmod(col("h"), lit(MinHashP)) + lit(b)) % MinHashP).as(s"m$i")
-    }
-    tok.groupBy(col("doc"))
-      .agg(minAggs.head, minAggs.tail :+ collect_set(col("h")).as("sh"): _*)
+                              shingleN: Int, engineNeutralHash: Boolean): DataFrame = {
+    val shingleHash: Column => Column =
+      if (engineNeutralHash) md5Prefix64 else s => xxhash64(s)
+    docs.select(col(idCol).as("doc"),
+      array_distinct(transform(wordShinglesFast(col(textCol), shingleN), shingleHash)).as("sh"))
   }
 
-  /** Exploded (doc, band, key) table from a [[minHashDocTable]].
-    *
-    * Band keys only — the heavy shingle arrays must NOT ride through
-    * the numBands× explode and the banding-join shuffle; they join
-    * back on the (small) candidate set for verification. The key is
-    * an arithmetic fold of the band's mins mod p (engine-neutral, 8
-    * bytes); a cross-band key collision only adds a candidate that
+  /** (doc, band, key) rows of a [[minHashDocTable]]: the band-key
+    * kernel per document, exploded with the band index. The shingle
+    * arrays do not ride along — only 8-byte keys reach the banding
+    * shuffle. A cross-band key collision only adds a candidate that
     * exact verification then filters — in BOTH engines alike.
     */
   private def bandKeyTable(docTable: DataFrame, numBands: Int,
-                           rowsPerBand: Int): DataFrame = {
-    val numHashes = numBands * rowsPerBand
-    docTable
-      .select(col("doc"), array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-      .select(
-        col("doc"),
-        explode(
-          transform(sequence(lit(0), lit(numBands - 1)),
-            b => struct(b.as("band"),
-              aggregate(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)), lit(0L),
-                (k, m) => (k * lit(1000003L) + m) % MinHashP).as("key")))
-        ).as("bk"))
-      .select(col("doc"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
+                           rowsPerBand: Int): DataFrame =
+    docTable.select(col("doc"),
+      posexplode(minHashBandKeys(col("sh"), numBands, rowsPerBand)).as(Seq("band", "key")))
+
+  /** Distinct (doc_a < doc_b) pairs sharing a bucket of a
+    * [[bandKeyTable]]: one posting list per (band, key), pairs from
+    * every list of two or more docs. The banded table is read once —
+    * a self-join would recompute it for each side.
+    */
+  private def bucketPairs(banded: DataFrame): DataFrame =
+    banded.groupBy("band", "key").agg(collect_list(col("doc")).as("ds"))
+      .where(size(col("ds")) >= 2)
+      .select(explode(col("ds")).as("doc_a"), col("ds"))
+      .select(col("doc_a"), explode(col("ds")).as("doc_b"))
+      .where(col("doc_a") < col("doc_b"))
+      .distinct()
 
   /** LSH banding calibration sweep — the [[minHashPairs]] tuning
     * artifact: for each (bands, rows) split of the SAME signature
@@ -462,11 +430,11 @@ object Dedup {
     * before paying for a corpus-scale run (the MinHash twin of the
     * IVF nprobe sweep).
     *
-    * One signature/shingle aggregation is shared by every
+    * One materialized shingle-hash table is shared by every
     * configuration (the signature width is the configs' common
-    * product — enforced); each arm pays only its own band-key
-    * explode + join. Candidate tables are materialized once
-    * (consumed by both the count and the verification).
+    * product — enforced); each arm pays only its own band-key kernel,
+    * posting lists and verification. Candidate tables are materialized
+    * once (consumed by both the count and the verification).
     */
   def minHashCalibration(docs: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3,
@@ -477,19 +445,12 @@ object Dedup {
     require(configs.forall { case (b, r) => b * r == numHashes },
       s"all configs must split the same signature width $numHashes")
     val docTable = minHashDocTable(docs, idCol, textCol, shingleN,
-      numHashes, engineNeutralHash = true).localCheckpoint()
-    val shingleTable = docTable.select(col("doc"), col("sh"))
+      engineNeutralHash = true).localCheckpoint()
     configs.map { case (b, r) =>
-      val banded = bandKeyTable(docTable, b, r)
-      val cands = banded.as("a")
-        .join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.doc") < col("b.doc"))
-        .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-        .dropDuplicates("doc_a", "doc_b")
+      val cands = bucketPairs(bandKeyTable(docTable, b, r))
         .localCheckpoint() // consumed twice: count + verification
       val nCand = cands.agg(count(lit(1)).as("n_candidates"))
-      val nVer = verifyJaccard(cands, shingleTable, shingleTable, verifyThreshold)
+      val nVer = verifyJaccard(cands, docTable, docTable, verifyThreshold)
         .agg(count(lit(1)).as("n_verified"))
       val s50 = BigDecimal(math.pow(1.0 / b, 1.0 / r))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

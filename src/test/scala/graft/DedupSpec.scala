@@ -222,6 +222,98 @@ class DedupSpec extends SparkSpec {
       s"fast-path pairs (${fast.size}) must equal md5-path pairs (${neutral.size})")
   }
 
+  // The MinHash arithmetic as separate SQL expressions: 64 permutation
+  // `min` aggregates per document, then each band's fold of its mins —
+  // the formulation the DuckDB oracle replays.
+  private def sqlSignature(hashRows: org.apache.spark.sql.DataFrame, numHashes: Int) = {
+    val mins = Dedup.minHashConsts(numHashes, seed = 42L).zipWithIndex.map { case ((a, b), i) =>
+      min((lit(a) * pmod(col("h"), lit(Dedup.MinHashP)) + lit(b)) % Dedup.MinHashP).as(s"m$i")
+    }
+    hashRows.groupBy("doc").agg(mins.head, mins.tail: _*)
+  }
+
+  private def sqlBandKeys(sig: org.apache.spark.sql.DataFrame, numBands: Int, rowsPerBand: Int) =
+    (0 until numBands).map { band =>
+      (0 until rowsPerBand).foldLeft(lit(0L)) { (k, j) =>
+        (k * lit(1000003L) + col(s"m${band * rowsPerBand + j}")) % Dedup.MinHashP
+      }
+    }
+
+  private def bandKeysKernel(hashes: org.apache.spark.sql.Column, numBands: Int, rowsPerBand: Int) =
+    org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.MinHashBandKeys(
+      org.apache.spark.sql.graft.ColumnBridge.expression(hashes), numBands, rowsPerBand))
+
+  test("minhash band-key kernel is bit-identical to the 64-min aggregate + band fold") {
+    val rnd = new scala.util.Random(20261019L)
+    val arrays: Seq[(Long, Option[Seq[Long]])] = Seq(
+      1L -> Some(Seq.fill(300)(rnd.nextLong())),        // raw xxhash64 range: negative half the time
+      2L -> Some(Seq.fill(120)(rnd.nextLong() >>> 4)),  // md5-prefix range
+      3L -> Some(Seq.fill(40)(rnd.nextLong()).flatMap(h => Seq(h, h, -h))), // duplicates
+      4L -> Some(Seq(rnd.nextLong())),                  // a single hash
+      5L -> Some(Seq(Long.MinValue, Long.MaxValue, -1L, 0L, Dedup.MinHashP, -Dedup.MinHashP)),
+      6L -> Some(Seq.empty),                            // no shingles: no keys
+      7L -> None)                                       // null
+    val df = arrays.toDF("doc", "hs")
+    val sig = sqlSignature(df.select(col("doc"), explode(col("hs")).as("h")), 64)
+    val want = sig.select(col("doc"), array(sqlBandKeys(sig, 16, 4): _*).as("keys"))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(want.keySet == Set(1L, 2L, 3L, 4L, 5L))
+    val got = df.select(col("doc"), bandKeysKernel(col("hs"), 16, 4).as("keys"))
+      .as[(Long, Option[Seq[Long]])].collect().toMap
+    assert(got(6L).contains(Seq.empty[Long]), "an empty hash array has no band keys")
+    assert(got(7L).isEmpty, "a null hash array stays null")
+    assert((got - 6L - 7L).map { case (d, k) => d -> k.get } == want)
+    // interpreted eval (the CodegenFallback path) agrees with codegen
+    arrays.foreach { case (d, hs) =>
+      val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
+        hs.orNull, org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))
+      val v = graft.plans.MinHashBandKeys(arr, 16, 4).eval()
+      assert(Option(v).map(_.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toLongArray().toSeq) == got(d), s"interpreted eval differs for doc $d")
+    }
+    // the public signature is the same kernel with one row per band
+    val sig8 = sqlSignature(df.select(col("doc"), explode(col("hs")).as("h")), 8)
+      .select(col("doc"), array((0 until 8).map(i => col(s"m$i")): _*))
+      .as[(Long, Seq[Long])].collect().toMap
+    val viaApi = df.where(col("doc") <= 5)
+      .select(col("doc"), Dedup.minHashSignature(col("hs"), 8))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(viaApi == sig8)
+  }
+
+  test("minHashPairs equals the aggregate-signature, self-join formulation for both hashes (sf0.001)") {
+    val d = Tables.documents(spark, sf001)
+    for (neutral <- Seq(true, false)) {
+      val h = if (neutral) graft.functions.TextFunctions.md5Prefix64(col("s")) else xxhash64(col("s"))
+      val hashRows = d
+        .select(col("doc_id").as("doc"),
+          explode(graft.functions.TextFunctions.wordShinglesFast(col("text"), 3)).as("s"))
+        .select(col("doc"), h.as("h"))
+      val sig = sqlSignature(hashRows, 64)
+      val sets = hashRows.groupBy("doc").agg(collect_set(col("h")).as("sh"))
+      val banded = sqlBandKeys(sig, 16, 4).zipWithIndex
+        .map { case (k, band) => sig.select(col("doc"), lit(band).as("band"), k.as("key")) }
+        .reduce(_ union _)
+      val want = banded.as("a")
+        .join(banded.as("b"), col("a.band") === col("b.band") &&
+          col("a.key") === col("b.key") && col("a.doc") < col("b.doc"))
+        .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b")).distinct()
+        .join(sets.select(col("doc").as("doc_a"), col("sh").as("sh_a")), "doc_a")
+        .join(sets.select(col("doc").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+        .select(col("doc_a"), col("doc_b"),
+          round(size(array_intersect(col("sh_a"), col("sh_b"))) /
+            (size(col("sh_a")) + size(col("sh_b")) -
+              size(array_intersect(col("sh_a"), col("sh_b")))), 6).as("jaccard"))
+        .where(col("jaccard") >= 0.12)
+        .as[(Long, Long, Double)].collect().toSet
+      val got = Dedup.minHashPairs(d, "doc_id", "text", 3, 16, 4, 0.12,
+          engineNeutralHash = neutral)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(want.nonEmpty && got == want,
+        s"engineNeutralHash=$neutral: ${got.size} pairs vs ${want.size}")
+    }
+  }
+
   test("connectedClusters: large-star/small-star matches known components") {
     val vertices = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")

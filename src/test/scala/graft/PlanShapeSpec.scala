@@ -230,6 +230,45 @@ class PlanShapeSpec extends SparkSpec {
     assert(exchanges <= 3, s"jaccard must stay a two-shuffle pipeline, saw $exchanges exchanges")
   }
 
+  test("minhash shingles the corpus once: no signature aggregate, no corpus collect_set (dedup_minhash)") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpExtractAll}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{CollectSet, Min}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    def shingles(e: Expression) = e.exists(_.isInstanceOf[RegExpExtractAll])
+    val df = SparkEntry.queries("dedup_minhash")(spark, sf001)
+    val opt = df.queryExecution.optimizedPlan
+    val sigAggs = opt.collect {
+      case a: Aggregate if a.aggregateExpressions.exists(_.exists {
+        case _: Min | _: CollectSet => true
+        case _ => false
+      }) => a
+    }
+    assert(sigAggs.isEmpty, s"no per-document min/collect_set aggregate:\n$opt")
+    // a shingler above a semi join must be restricted to candidate ids,
+    // which derive from the band keys
+    def semiJoins(n: LogicalPlan) = n.collect {
+      case j: Join if j.joinType == LeftSemi => j
+    }
+    val restricted = opt.collect {
+      case n if n.expressions.exists(shingles) && semiJoins(n).nonEmpty => n
+    }
+    assert(restricted.nonEmpty && restricted.forall(n => semiJoins(n).forall(_.right.exists(
+      _.expressions.exists(_.exists(_.isInstanceOf[graft.plans.MinHashBandKeys]))))),
+      s"verification shingles only the candidate documents:\n$opt")
+    // in the executed plan, one shingler reads the unrestricted scan:
+    // every other use of the banding pass is a reused exchange
+    df.collect()
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val fin = df.queryExecution.executedPlan
+    val corpusPasses = helper.collect(fin) {
+      case n if n.expressions.exists(shingles) && helper.collect(n) {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec if j.joinType == LeftSemi => j
+      }.isEmpty => n
+    }
+    assert(corpusPasses.size == 1, s"the corpus must be shingled once:\n$fin")
+  }
+
   test("decontamination broadcasts the benchmark gram set (text_decontaminate)") {
     val p = plan("text_decontaminate")
     assert(p.contains("BroadcastHashJoin"),
