@@ -636,36 +636,34 @@ object Dedup {
     * pipeline actually materializes — keep `doc_id == cluster_id`, or
     * pick per-cluster representatives by any policy.
     *
-    * Algorithm: alternating large-star/small-star (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    * standard distributed CC. Converges in O(log n) rounds regardless
-    * of component DIAMETER; min-label propagation (the naive
-    * alternative) needs O(diameter) rounds, pathological for
-    * chain-shaped duplicate graphs (templated docs where each revision
-    * pairs only with its neighbors). Each round is two join+aggregate
-    * passes over the edge set; edges only ever re-point toward smaller
-    * ids, and at convergence every non-root points DIRECTLY at its
-    * component minimum — the label lookup is then one left join.
+    * Algorithm: while the edge set is larger than a fixed bound (2^20
+    * edges, which bounds one task's memory), alternating
+    * large-star/small-star rounds (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14) — the standard
+    * distributed CC. They converge in O(log n) rounds regardless of
+    * component DIAMETER; min-label propagation (the naive alternative)
+    * needs O(diameter) rounds, pathological for chain-shaped duplicate
+    * graphs (templated docs where each revision pairs only with its
+    * neighbors). Each round is two join+aggregate passes over the edge
+    * set, and edges only ever re-point toward smaller ids. Once the
+    * edge count is at or below the bound (before the first round, on
+    * any input that small), a single task finishes: union-find over
+    * the edges read as one partition. Either way every non-root ends
+    * up pointing DIRECTLY at its component minimum — the label lookup
+    * is then one left join.
     *
-    * Fault tolerance: pass `checkpointDir` to cut per-round lineage
-    * with RELIABLE `checkpoint()` writes (survive executor loss — the
-    * right mode on a real cluster); the default `localCheckpoint`
-    * (executor-local blocks) is the low-overhead local-mode stand-in.
-    * Either way executor storage stays O(|edges|), not
-    * O(rounds·|edges|) ([[Rounds.release]]).
+    * Fault tolerance: pass `checkpointDir` to cut lineage with
+    * RELIABLE `checkpoint()` writes (survive executor loss — the right
+    * mode on a real cluster) of the input edges, of every round above
+    * the bound and of the single task's result; the default
+    * `localCheckpoint` (executor-local blocks) is the low-overhead
+    * local-mode stand-in. Either way executor storage stays
+    * O(|edges|), not O(rounds·|edges|) ([[Rounds.release]]).
     */
   def connectedClusters(vertices: DataFrame, idCol: String, pairs: DataFrame,
                         checkpointDir: Option[String] = None): DataFrame = {
-    // components are over the pair graph INDUCED on the vertex set:
-    // edges touching ids outside `vertices` are dropped, so every
-    // cluster_id is guaranteed to be a member id (a pair endpoint
-    // filtered out of the corpus upstream must not become a phantom
-    // cluster minimum that no representative filter can match)
     val ids = vertices.select(col(idCol).as("doc_id"))
-    val induced = pairs
-      .join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-      .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-    val stars = starEdges(induced, checkpointDir)._1
+    val stars = starEdges(inducedPairs(ids, pairs), checkpointDir)._1
     ids
       .join(stars.select(col("u").as("doc_id"), col("v").as("root")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("cluster_id"))
@@ -673,21 +671,32 @@ object Dedup {
 
   /** The terminal dedup step: keep ONE document per connected
     * near-dup cluster (the minimum id — any deterministic policy
-    * works), dropping every other cluster member. Composes
-    * [[connectedClusters]] over the given pair graph with a semi-join
-    * back onto the corpus; at scale the cluster map is tiny relative
-    * to the corpus (only docs in ≥1 pair have non-trivial clusters),
-    * so the join shuffles ids, not documents.
+    * works), dropping every other cluster member. The star edges of
+    * [[connectedClusters]] name exactly the non-root members (every
+    * `u` is a member whose cluster minimum is smaller), so the corpus
+    * is one left anti-join against their `u` column; rows with a null
+    * id are dropped, as no cluster holds them. The join's build side
+    * is O(|docs in pairs|), not O(|docs|): singletons never enter it.
     */
   def keepClusterRepresentatives(docs: DataFrame, idCol: String,
                                  pairs: DataFrame,
                                  checkpointDir: Option[String] = None): DataFrame = {
-    val clusters = connectedClusters(docs.select(col(idCol)), idCol, pairs, checkpointDir)
-    docs.join(
-      clusters.where(col("doc_id") === col("cluster_id"))
-        .select(col("doc_id").as(idCol)),
-      Seq(idCol), "left_semi")
+    val stars = starEdges(inducedPairs(docs.select(col(idCol).as("doc_id")), pairs),
+      checkpointDir)._1
+    docs.where(col(idCol).isNotNull)
+      .join(stars.select(col("u").as(idCol)), Seq(idCol), "left_anti")
   }
+
+  /** The pair graph INDUCED on a vertex set (`ids`' `doc_id`): edges
+    * touching ids outside it are dropped, so every cluster minimum is
+    * a member id (a pair endpoint filtered out of the corpus upstream
+    * must not become a phantom cluster minimum that no representative
+    * filter can match).
+    */
+  private def inducedPairs(ids: DataFrame, pairs: DataFrame): DataFrame =
+    pairs
+      .join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
+      .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
 
   /** Materialize the near-dup cluster map (doc_id → cluster_id) to
     * parquet. The map is the artifact a real dedup pipeline serves
@@ -858,13 +867,21 @@ object Dedup {
       .unionByName(neg.withColumn("label", lit("neg")))
   }
 
-  /** The large-star/small-star iteration: returns the converged star
-    * edge set (every edge (u, v) has v = u's component minimum) and
-    * the number of rounds it took — exposed so tests can assert the
-    * logarithmic round count on high-diameter graphs.
+  /** The edge count at or below which [[starEdges]] finishes in one
+    * task: union-find holds every node of the edge set in that task's
+    * memory (about 2^21 ids at most).
+    */
+  private val LocalEdges = 1L << 20
+
+  /** Connected components as star edges (every edge (u, v) has v = u's
+    * component minimum, one edge per non-minimum node) and the number
+    * of large-star/small-star rounds run before a single task finished
+    * — exposed so tests can assert the logarithmic round count on
+    * high-diameter graphs (with `localEdges` = 0, rounds only).
     */
   private[graft] def starEdges(pairs: DataFrame, checkpointDir: Option[String],
-                               maxRounds: Int = 64): (DataFrame, Int) = {
+                               maxRounds: Int = 64,
+                               localEdges: Long = LocalEdges): (DataFrame, Int) = {
     var edges = Rounds.materialize(
       pairs.select(greatest(col("doc_a"), col("doc_b")).as("u"),
                    least(col("doc_a"), col("doc_b")).as("v"))
@@ -874,7 +891,7 @@ object Dedup {
     var nEdges = edges.count()
     var rounds = 0
     var done = nEdges == 0L
-    while (!done && rounds < maxRounds) {
+    while (!done && nEdges > localEdges && rounds < maxRounds) {
       val next = Rounds.materialize(smallStar(largeStar(edges)), checkpointDir)
       val nNext = next.count()
       // set equality = equal cardinality + (next \ edges) empty; the
@@ -887,12 +904,70 @@ object Dedup {
       nEdges = nNext
       rounds += 1
     }
+    if (!done && nEdges <= localEdges) {
+      val stars = Rounds.materialize(unionFindStars(edges), checkpointDir)
+      Rounds.release(edges)
+      edges = stars
+      done = true
+    }
     // the alternating algorithm provably converges in O(log n) rounds;
     // maxRounds is a runaway backstop — hitting it means a bug, and a
     // silent non-converged label table would be WRONG clusters
     if (!done) throw new IllegalStateException(
       s"connected components did not converge in $maxRounds rounds ($nEdges edges)")
     (edges, rounds)
+  }
+
+  /** Star edges of a small (u, v) edge set in ONE task: union-find by
+    * the smaller root, with path compression, so every root is its
+    * component's minimum; every other node emits (node, root). Ids
+    * keep their own type and are ordered by Spark's ordering for it,
+    * the one `least`/`greatest` use.
+    */
+  private def unionFindStars(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    val schema = edges.schema
+    val idType = schema("u").dataType
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
+    val stars = edges.queryExecution.toRdd.coalesce(1).mapPartitions { rows =>
+      val index = new java.util.HashMap[Any, Integer]
+      val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+      var parent = new Array[Int](1024)
+      def node(id: Any): Int = {
+        val known = index.get(id)
+        if (known != null) known
+        else {
+          val n = ids.length
+          val owned = InternalRow.copyValue(id) // input rows are reused
+          index.put(owned, n)
+          ids += owned
+          if (n == parent.length) parent = java.util.Arrays.copyOf(parent, 2 * n)
+          parent(n) = n
+          n
+        }
+      }
+      def find(x: Int): Int = {
+        var root = x
+        while (parent(root) != root) root = parent(root)
+        var y = x
+        while (parent(y) != root) { val up = parent(y); parent(y) = root; y = up }
+        root
+      }
+      rows.foreach { r =>
+        val a = find(node(r.get(0, idType)))
+        val b = find(node(r.get(1, idType)))
+        if (a != b) {
+          if (ord.lt(ids(a), ids(b))) parent(b) = a else parent(a) = b
+        }
+      }
+      Iterator.range(0, ids.length).flatMap { i =>
+        val root = find(i)
+        if (root == i) None
+        else Some(new GenericInternalRow(Array[Any](ids(i), ids(root))): InternalRow)
+      }
+    }
+    org.apache.spark.sql.graft.ColumnBridge.dataFrame(edges.sparkSession, stars, schema)
   }
 
   /** Large-star: every node re-points its LARGER neighbors at the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -347,12 +348,35 @@ class DedupSpec extends SparkSpec {
     assert(kept == Seq(5L, 6L), "no member may vanish behind an absent cluster minimum")
   }
 
+  test("keepClusterRepresentatives: the anti-join on non-root members keeps the semi-join's rows") {
+    // the earlier form: every doc whose cluster_id is itself, semi-joined
+    // back onto the corpus
+    def rootsSemiJoin(docs: DataFrame, pairs: DataFrame): DataFrame = {
+      val clusters = Dedup.connectedClusters(docs.select(col("doc_id")), "doc_id", pairs)
+      docs.join(clusters.where(col("doc_id") === col("cluster_id")).select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
+    }
+    def rows(df: DataFrame): Seq[String] = df.select("doc_id", "text").collect().map(_.toString).toSeq.sorted
+    val pairs = Seq((1L, 2L), (2L, 3L), (0L, 4L), (4L, 9L), (5L, 6L)).toDF("doc_a", "doc_b")
+    val inputs = Seq(
+      "a null id" -> Seq[(java.lang.Long, String)]((null, "none"), (1L, "one"), (2L, "two"), (5L, "five")),
+      "duplicate id rows" -> Seq[(java.lang.Long, String)]((1L, "one"), (1L, "uno"), (2L, "two"),
+        (2L, "dos"), (3L, "three"), (7L, "seven"), (7L, "sieben")),
+      "pair endpoints outside docs" -> Seq[(java.lang.Long, String)]((2L, "two"), (3L, "three"),
+        (4L, "four"), (6L, "six")))
+    for ((what, docRows) <- inputs) {
+      val docs = docRows.toDF("doc_id", "text")
+      assert(rows(Dedup.keepClusterRepresentatives(docs, "doc_id", pairs)) == rows(rootsSemiJoin(docs, pairs)),
+        what)
+    }
+  }
+
   test("connectedClusters: round count is logarithmic on a chain, not O(diameter)") {
     // a 64-node chain has diameter 63 — min-label propagation would
     // need 63 rounds; large-star/small-star must stay logarithmic
     val n = 64L
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (stars, rounds) = Dedup.starEdges(pairs, checkpointDir = None)
+    val (stars, rounds) = Dedup.starEdges(pairs, checkpointDir = None, localEdges = 0)
     assert(rounds <= 10, s"expected O(log n) rounds on a 64-chain, got $rounds")
     val roots = stars.select("v").distinct().as[Long].collect().toSeq
     assert(roots == Seq(1L), "at convergence every node points at the component minimum")

@@ -95,23 +95,45 @@ class PropertySpec extends SparkSpec {
     import graft.operators.Dedup
     // random sparse pair graphs vs an in-memory union-find: catches
     // any star-contraction edge case (self-pairs, parallel edges,
-    // reversed orientation, multi-chain merges) the fixed specs miss
+    // reversed orientation, multi-chain merges) the fixed specs miss.
+    // Each graph runs three ways: the default bound (one task only),
+    // bound 0 (star rounds only), and a bound below its edge count
+    // (rounds, then the one-task finish).
     val nV = 24
-    val genEdges = Gen.listOfN(20, Gen.zip(Gen.choose(1L, nV.toLong), Gen.choose(1L, nV.toLong)))
-    for (edges <- samples(genEdges, 8)) {
-      val parent = Array.tabulate(nV + 1)(identity)
-      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
+    val genEdges = Gen.listOfN(20, Gen.zip(Gen.choose(1, nV), Gen.choose(1, nV)))
+    def reference[T](nodes: Seq[T], edges: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
+      val parent = scala.collection.mutable.Map(nodes.map(v => v -> v): _*)
+      def find(x: T): T = if (parent(x) == x) x else find(parent(x))
       edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
       }
-      val expected = (1 to nV).map(v => v.toLong -> find(v).toLong).toMap
-      val vertices = (1L to nV.toLong).toDF("doc_id")
-      val pairs = edges.toDF("doc_a", "doc_b")
-      val got = Dedup.connectedClusters(vertices, "doc_id", pairs)
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"edges=$edges")
+      nodes.map(v => v -> find(v)).toMap
     }
+    def fromStars[T](nodes: Seq[T], stars: Seq[(T, T)]): Map[T, T] =
+      nodes.map(v => v -> v).toMap ++ stars
+    var finishedEarly = false
+    def threeWays[T](nodes: Seq[T], edges: Seq[(T, T)])(implicit ord: Ordering[T],
+        e: org.apache.spark.sql.Encoder[T], pe: org.apache.spark.sql.Encoder[(T, T)]): Unit = {
+      val expected = reference(nodes, edges)
+      val pairs = edges.toDS().toDF("doc_a", "doc_b")
+      val got = Dedup.connectedClusters(nodes.toDS().toDF("doc_id"), "doc_id", pairs)
+        .as[(T, T)].collect().toMap
+      assert(got == expected, s"in one task: edges=$edges")
+      val nEdges = edges.collect { case (a, b) if a != b => (ord.max(a, b), ord.min(a, b)) }.distinct.size
+      val (roundStars, rounds) = Dedup.starEdges(pairs, None, localEdges = 0)
+      assert(fromStars(nodes, roundStars.as[(T, T)].collect()) == expected, s"in rounds: edges=$edges")
+      val (mixedStars, mixedRounds) = Dedup.starEdges(pairs, None, localEdges = nEdges - 1L)
+      assert(mixedRounds >= 1)
+      assert(fromStars(nodes, mixedStars.as[(T, T)].collect()) == expected, s"rounds, then one task: edges=$edges")
+      finishedEarly ||= mixedRounds < rounds
+    }
+    for (edges <- samples(genEdges, 8)) {
+      threeWays((1L to nV.toLong), edges.map { case (a, b) => (a.toLong, b.toLong) })
+      // string ids order as strings ("n10" < "n2"), not as numbers
+      threeWays((1 to nV).map(v => s"n$v"), edges.map { case (a, b) => (s"n$a", s"n$b") })
+    }
+    assert(finishedEarly, "no graph reached the one-task finish after a round")
   }
 
   test("snapshotDiff matches a brute-force reference on random snapshot pairs") {
