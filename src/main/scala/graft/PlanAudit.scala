@@ -36,7 +36,10 @@ object PlanAudit {
                "profile_roc_stream",
                // the MinHash family: one shingling pass per corpus, one
                // band-key kernel, posting-list candidates
-               "dedup_minhash", "dedup_cross", "dedup_lsh_calibration")
+               "dedup_minhash", "dedup_cross", "dedup_lsh_calibration",
+               // the CSV sink's parallel final stage and the OData
+               // scan's per-task metrics
+               "etl_csv_roundtrip", "odata_scan")
     for (name <- names) {
       println(s"================ $name ================")
       println(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(

@@ -150,15 +150,73 @@ object Etl {
   def renameForSink(df: DataFrame, renameMap: Map[String, String]): DataFrame =
     df.select(df.columns.map(c => col(c).as(renameMap.getOrElse(c, c))).toIndexedSeq: _*)
 
-  /** K1 — CSV sink: single file, header, UTF-8, overwrite
-    * (etl.py:220-223; idempotent-overwrite semantics per etl.yml).
-    * `coalesce(1)` matches the reference's one-CSV-in-git contract;
-    * for genuinely large outputs callers should drop the coalesce and
-    * let the sink write one file per partition.
+  /** K1 — CSV sink: header, UTF-8, overwrite (etl.py:220-223;
+    * idempotent-overwrite semantics per etl.yml). `singleFile` keeps
+    * the reference's one-CSV-in-git contract without a `coalesce(1)`,
+    * which would run the frame's whole last stage (the dedup
+    * aggregate's final pass) as one task: every partition writes its
+    * own part file, header included, into a hidden sibling directory
+    * of `path`; the driver concatenates the parts in name order into
+    * one file named like the first part, keeping the first header and
+    * dropping every later one, and then renames the directory, its
+    * `_SUCCESS` marker included, onto `path`. Only that byte copy is
+    * serial. An empty frame writes one header-only file, as the
+    * coalesced write did, and a failed write leaves no directory
+    * behind. Without `singleFile` the part files stay as written.
     */
   def writeCsv(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").option("header", "true").csv(path)
+    def write(to: String): Unit = df.write.mode("overwrite").option("header", "true").csv(to)
+    if (!singleFile) return write(path)
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(path).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val dest = fs.makeQualified(new Path(path))
+    val tmp = new Path(dest.getParent, s".${dest.getName}.parts-${java.util.UUID.randomUUID()}")
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to)) throw new java.io.IOException(s"csv sink: cannot rename $from to $to")
+    try {
+      write(tmp.toString)
+      // Spark writes at least one part, even for an empty frame
+      val parts = fs.listStatus(tmp).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      val merged = new Path(tmp, "_merged")
+      val out = fs.create(merged, false)
+      try {
+        var header: Array[Byte] = null
+        parts.foreach { part =>
+          val in = fs.open(part)
+          try {
+            val h = csvHeader(in)
+            if (header == null) { header = h; out.write(h) }
+            else require(h.isEmpty || java.util.Arrays.equals(h, header),
+              s"csv sink: part $part starts with a different header")
+            in.transferTo(out)
+          } finally in.close()
+        }
+      } finally out.close()
+      parts.foreach(fs.delete(_, false))
+      rename(merged, parts.head)
+      if (fs.exists(dest)) fs.delete(dest, true)
+      rename(tmp, dest)
+    } finally if (fs.exists(tmp)) fs.delete(tmp, true)
+  }
+
+  /** The header record a CSV part file starts with: its bytes up to and
+    * including the first line feed outside a quoted field (the sink's
+    * default quote `"` and escape `\`); empty for an empty file.
+    */
+  private def csvHeader(in: java.io.InputStream): Array[Byte] = {
+    val h = new java.io.ByteArrayOutputStream
+    var quoted, escaped = false
+    var b = in.read()
+    while (b >= 0) {
+      h.write(b)
+      if (escaped) escaped = false
+      else if (quoted && b == '\\') escaped = true
+      else if (b == '"') quoted = !quoted
+      else if (b == '\n' && !quoted) return h.toByteArray
+      b = in.read()
+    }
+    h.toByteArray
   }
 
   /** K1b — JSONL sink: one JSON object per line, overwrite. Same

@@ -4,6 +4,7 @@ import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** Minimal OData HTTP client (JDK HttpURLConnection + the Jackson that
@@ -113,8 +114,10 @@ object ODataClient {
     tok
   }
 
+  /** One answer: `bytes` is the size of the body as decoded (after any
+    * gzip inflation), 0 where it was not counted. */
   final case class Response(status: Int, body: String,
-                            retryAfterMs: Option[Long] = None)
+                            retryAfterMs: Option[Long] = None, bytes: Long = 0L)
 
   final case class Page(rows: Seq[Map[String, String]], nextLink: Option[String],
                         deltaLink: Option[String] = None)
@@ -169,14 +172,13 @@ object ODataClient {
       // Retry-After pacing) — the diagnostic degrades to empty, the
       // status survives. A corrupt gzip DATA body (2xx) still throws:
       // that is payload corruption, not a diagnostics nicety.
-      val body =
+      val decoded =
         if (raw.nonEmpty && "gzip".equalsIgnoreCase(conn.getContentEncoding))
-          try new String(new java.util.zip.GZIPInputStream(
-              new java.io.ByteArrayInputStream(raw)).readAllBytes(),
-            StandardCharsets.UTF_8)
-          catch { case _: java.io.IOException if status >= 400 => "" }
-        else if (raw.isEmpty) ""
-        else new String(raw, StandardCharsets.UTF_8)
+          try new java.util.zip.GZIPInputStream(
+              new java.io.ByteArrayInputStream(raw)).readAllBytes()
+          catch { case _: java.io.IOException if status >= 400 => Array.emptyByteArray }
+        else raw
+      val body = if (decoded.isEmpty) "" else new String(decoded, StandardCharsets.UTF_8)
       // delta-seconds form only (an HTTP-date Retry-After falls back
       // to the client's own exponential backoff); capped at 5 minutes
       // BEFORE the millis conversion so a hostile/buggy header can
@@ -184,7 +186,7 @@ object ODataClient {
       val retryAfter = Option(conn.getHeaderField("Retry-After"))
         .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
         .filter(_ >= 0).map(s => math.min(s, 300L) * 1000L)
-      Response(status, body, retryAfter)
+      Response(status, body, retryAfter, decoded.length.toLong)
     } finally conn.disconnect()
   }
 
@@ -209,10 +211,18 @@ object ODataClient {
   def getWithRetry(url: String, user: Option[String], password: Option[String],
                    timeoutMs: Int, maxRetries: Int, backoffMs: Long,
                    extraHeaders: Seq[(String, String)] = Nil,
-                   oauth: Option[OAuthConfig] = None): String = {
+                   oauth: Option[OAuthConfig] = None): String =
+    fetch(url, user, password, timeoutMs, maxRetries, backoffMs, extraHeaders, oauth).body
+
+  /** [[getWithRetry]] returning the whole 2xx [[Response]] (its body
+    * and byte count); any other final status throws. */
+  def fetch(url: String, user: Option[String], password: Option[String],
+            timeoutMs: Int, maxRetries: Int, backoffMs: Long,
+            extraHeaders: Seq[(String, String)] = Nil,
+            oauth: Option[OAuthConfig] = None): Response = {
     val r = getWithRetryResponse(url, user, password, timeoutMs, maxRetries,
       backoffMs, extraHeaders, oauth)
-    if (r.status >= 200 && r.status < 300) r.body
+    if (r.status >= 200 && r.status < 300) r
     else throw new ODataHttpException(r.status, url, r.body)
   }
 
@@ -367,7 +377,7 @@ object ODataClient {
           val st = rn.get("status").asInt()
           val b = Option(rn.get("body")).map(bn =>
             if (bn.isValueNode) bn.asText() else bn.toString).getOrElse("")
-          id -> Response(st, b)
+          id -> Response(st, b, bytes = b.getBytes(StandardCharsets.UTF_8).length.toLong)
         }.toMap
         requests.foreach { case (id, u) =>
           require(byId.contains(id),
@@ -396,9 +406,20 @@ object ODataClient {
   /** Envelope decode, both dialects (reference `src/etl.py:89-93`):
     * v2: `{"d": {"results": [...], "__next": url}}`
     * v4: `{"value": [...], "@odata.nextLink": url}` (or `odata.nextLink`)
-    * Cell values arrive stringified: scalars via asText, nested
-    * objects/arrays as their JSON text (engine-semantics stringify,
-    * SURVEY §7.4.1), explicit null as SQL null.
+    * v2 minimal: `{"d": [...]}`
+    * in that order of precedence, whatever the order of the keys (a
+    * `__next` before its `results` included); anything else throws.
+    *
+    * One streaming pass of Jackson's `JsonParser` over the page, no
+    * tree: of every row it builds only the `fields` its caller reads
+    * (None = all of them) and skips every other value unbuilt — the
+    * ByD `__metadata` object a narrow scan drops is never parsed into
+    * nodes nor re-serialized. Values are what the tree decode gave:
+    * strings as their text, explicit null as SQL null, other scalars
+    * as `JsonNode.asText()` renders them (`1e10` → `1.0E10`, `-0` →
+    * `0`), nested objects/arrays as their compact JSON text
+    * (engine-semantics stringify, SURVEY §7.4.1); a duplicate key's
+    * last value wins.
     *
     * `base` — the URL this page was fetched from. v2 servers in the
     * wild emit RELATIVE `__next` continuations (and v4 ones lawfully
@@ -407,28 +428,133 @@ object ODataClient {
     * keeps the previous posture: a relative link fails loudly at URI
     * parse when followed.
     */
-  def parsePage(body: String, base: String = ""): Page = {
-    def abs(link: String): String = resolveLink(base, link)
-    val root = mapper.readTree(body)
-    val d = root.path("d")
-    val (results, next) =
-      if (!d.isMissingNode && d.has("results"))
-        (d.path("results"), Option(d.get("__next")).map(_.asText()))
-      else if (d.isObject && d.isArray) (d, None) // unreachable; keep shape explicit
-      else if (root.has("value"))
-        (root.path("value"),
-          Option(root.get("@odata.nextLink")).orElse(Option(root.get("odata.nextLink"))).map(_.asText()))
-      else if (!d.isMissingNode && d.isArray) (d, None) // v2 minimal: {"d": [...]}
-      else throw new IllegalArgumentException(
-        s"Unrecognized OData envelope: ${body.take(200)}")
-    val rows = results.elements().asScala.map(nodeToMap).toSeq
-    // v4 change tracking: the FINAL page of a tracked read (and of a
-    // delta feed) carries @odata.deltaLink — the resumption token the
-    // incremental-sync operator persists (ODataDelta)
-    val delta = Option(root.get("@odata.deltaLink"))
-      .orElse(Option(root.get("odata.deltaLink"))).map(_.asText())
-    Page(rows, next.filter(_.nonEmpty).map(abs),
-      delta.filter(_.nonEmpty).map(abs))
+  def parsePage(body: String, base: String = "",
+                fields: Option[Set[String]] = None): Page = {
+    val p = mapper.getFactory.createParser(body)
+    try new PageDecoder(p, fields).page(body, base)
+    finally p.close()
+  }
+
+  /** The state of one [[parsePage]] pass. Every envelope candidate the
+    * root holds is decoded as it streams by (a server sends one), and
+    * the precedence picks among them once the root object has closed.
+    */
+  private final class PageDecoder(p: JsonParser, fields: Option[Set[String]]) {
+    private type Rows = Seq[Map[String, String]]
+    private var dResults: Option[Rows] = None // d.results, if d has it
+    private var dNext: Option[String] = None
+    private var dArray: Option[Rows] = None // d itself, if an array
+    private var value: Option[Rows] = None
+    private var links = Map.empty[String, String] // root-level annotations
+
+    def page(body: String, base: String): Page = {
+      if (p.nextToken() == JsonToken.START_OBJECT)
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val name = p.currentName()
+          val t = p.nextToken()
+          name match {
+            case "d" =>
+              dResults = None; dNext = None; dArray = None
+              if (t == JsonToken.START_ARRAY) dArray = Some(rows(t))
+              else if (t == JsonToken.START_OBJECT)
+                while (p.nextToken() == JsonToken.FIELD_NAME) {
+                  val k = p.currentName()
+                  val tk = p.nextToken()
+                  k match {
+                    case "results" => dResults = Some(rows(tk))
+                    case "__next" => dNext = Some(asText(tk))
+                    case _ => p.skipChildren()
+                  }
+                }
+            case "value" => value = Some(rows(t))
+            case "@odata.nextLink" | "odata.nextLink" |
+                 "@odata.deltaLink" | "odata.deltaLink" =>
+              links = links.updated(name, asText(t))
+            case _ => p.skipChildren()
+          }
+        }
+      val (results, next) =
+        if (dResults.isDefined) (dResults.get, dNext)
+        else if (value.isDefined)
+          (value.get, links.get("@odata.nextLink").orElse(links.get("odata.nextLink")))
+        else if (dArray.isDefined) (dArray.get, None)
+        else throw new IllegalArgumentException(
+          s"Unrecognized OData envelope: ${body.take(200)}")
+      // v4 change tracking: the FINAL page of a tracked read (and of a
+      // delta feed) carries @odata.deltaLink — the resumption token the
+      // incremental-sync operator persists (ODataDelta)
+      val delta = links.get("@odata.deltaLink").orElse(links.get("odata.deltaLink"))
+      def abs(link: String): String = resolveLink(base, link)
+      Page(results, next.filter(_.nonEmpty).map(abs), delta.filter(_.nonEmpty).map(abs))
+    }
+
+    /** The rows of a results value: an array's elements, an object's
+      * values (the tree decode iterated both), none for a scalar. An
+      * element that is not an object is a row with no fields.
+      */
+    private def rows(t: JsonToken): Rows = t match {
+      case JsonToken.START_ARRAY =>
+        val out = Vector.newBuilder[Map[String, String]]
+        while (p.nextToken() != JsonToken.END_ARRAY) out += row(p.currentToken())
+        out.result()
+      case JsonToken.START_OBJECT =>
+        // a repeated key keeps its first position and its last value,
+        // as a tree's object node does
+        val byKey = new java.util.LinkedHashMap[String, Map[String, String]]
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val k = p.currentName()
+          byKey.put(k, row(p.nextToken()))
+        }
+        byKey.values().asScala.toVector
+      case _ => Vector.empty
+    }
+
+    private def row(t: JsonToken): Map[String, String] =
+      if (t != JsonToken.START_OBJECT) { p.skipChildren(); Map.empty }
+      else {
+        val out = Map.newBuilder[String, String]
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val k = p.currentName()
+          val tv = p.nextToken()
+          if (fields.forall(_.contains(k))) out += k -> cell(tv)
+          else p.skipChildren()
+        }
+        out.result()
+      }
+
+    /** One cell's text: the tree decode's `asText()` for a scalar, SQL
+      * null for JSON null, compact JSON text for a nested value.
+      */
+    private def cell(t: JsonToken): String = t match {
+      case JsonToken.VALUE_STRING => p.getText
+      case JsonToken.VALUE_NULL => null
+      case JsonToken.START_OBJECT | JsonToken.START_ARRAY =>
+        mapper.readTree[JsonNode](p).toString
+      case _ => scalar(t)
+    }
+
+    /** A link annotation's text, as `asText()` of its node gave it. */
+    private def asText(t: JsonToken): String = t match {
+      case JsonToken.VALUE_STRING => p.getText
+      case JsonToken.VALUE_NULL => "null"
+      case JsonToken.START_OBJECT | JsonToken.START_ARRAY => p.skipChildren(); ""
+      case _ => scalar(t)
+    }
+
+    // numbers and booleans the way the tree's nodes print them: an
+    // integer as the smallest of int/long/BigInteger that holds it, a
+    // float as a double
+    private def scalar(t: JsonToken): String = t match {
+      case JsonToken.VALUE_TRUE => "true"
+      case JsonToken.VALUE_FALSE => "false"
+      case JsonToken.VALUE_NUMBER_INT => p.getNumberType match {
+        case JsonParser.NumberType.INT => Integer.toString(p.getIntValue)
+        case JsonParser.NumberType.LONG => java.lang.Long.toString(p.getLongValue)
+        case _ => p.getBigIntegerValue.toString
+      }
+      case JsonToken.VALUE_NUMBER_FLOAT => java.lang.Double.toString(p.getDoubleValue)
+      case _ => p.getText
+    }
   }
 
   /** RFC 3986 resolution of a (possibly relative) continuation link

@@ -937,6 +937,63 @@ class ODataCodesMsMetric extends CustomSumMetric {
   override def description(): String = "structure-code enumeration time while planning (ms)"
 }
 
+/** Task-side scan metrics (DSv2 `currentMetricsValues`): what the
+  * readers fetched and decoded, counted once per page.
+  */
+class ODataPagesMetric extends CustomSumMetric {
+  override def name(): String = "pages"
+  override def description(): String = "result pages fetched"
+}
+
+class ODataRowsMetric extends CustomSumMetric {
+  override def name(): String = "rows"
+  override def description(): String = "rows decoded from result pages"
+}
+
+class ODataResponseBytesMetric extends CustomSumMetric {
+  override def name(): String = "responseBytes"
+  override def description(): String = "result page bytes, as decoded"
+}
+
+class ODataDecodeMsMetric extends CustomSumMetric {
+  override def name(): String = "decodeMs"
+  override def description(): String = "result page decode time (ms)"
+}
+
+/** One reader's page fetch and decode, and the per-task metrics it
+  * adds up (see [[ODataPagesMetric]] and its siblings).
+  */
+private[odata] final class PageReads(opts: ODataOptions) {
+  private var pages, rows, bytes, decodeNanos = 0L
+
+  def fetch(url: String, fields: Option[Set[String]] = None): ODataClient.Page =
+    decode(ODataClient.fetch(url, opts.user, opts.password, opts.timeoutMs,
+      opts.maxRetries, opts.retryBackoffMs, oauth = opts.oauth), url, fields)
+
+  def decode(r: ODataClient.Response, base: String,
+             fields: Option[Set[String]]): ODataClient.Page = {
+    val t0 = System.nanoTime()
+    val page = ODataClient.parsePage(r.body, base, fields)
+    decodeNanos += System.nanoTime() - t0
+    pages += 1
+    rows += page.rows.size
+    bytes += r.bytes
+    page
+  }
+
+  def metrics: Array[CustomTaskMetric] =
+    Array(PageReads.metric("pages", pages), PageReads.metric("rows", rows),
+      PageReads.metric("responseBytes", bytes),
+      PageReads.metric("decodeMs", decodeNanos / 1000000L))
+}
+
+private[odata] object PageReads {
+  def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
+  }
+}
+
 class ODataScan(schema: StructType, opts: ODataOptions,
                 pushedEq: Seq[(String, OLit)], limit: Option[Int],
                 orderBy: Seq[(String, Boolean)],
@@ -993,16 +1050,12 @@ class ODataScan(schema: StructType, opts: ODataOptions,
   private val codesNanos = new java.util.concurrent.atomic.AtomicLong
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new ODataCodesRequestsMetric, new ODataCodesMsMetric)
+    Array(new ODataCodesRequestsMetric, new ODataCodesMsMetric, new ODataPagesMetric,
+      new ODataRowsMetric, new ODataResponseBytesMetric, new ODataDecodeMsMetric)
 
-  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
-    def metric(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
-      override def name(): String = n
-      override def value(): Long = v
-    }
-    Array(metric("codesRequests", codesRequests.get),
-      metric("codesMs", codesNanos.get / 1000000L))
-  }
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    Array(PageReads.metric("codesRequests", codesRequests.get),
+      PageReads.metric("codesMs", codesNanos.get / 1000000L))
 
   /** RUNTIME filtering (the DSv2 dynamic-partition-pruning hook): a
     * join whose other side broadcasts hands this scan the build side's
@@ -1190,7 +1243,7 @@ class ODataScan(schema: StructType, opts: ODataOptions,
       codesRequests.incrementAndGet()
       ODataClient.parsePage(ODataClient.getWithRetry(url, opts.user,
         opts.password, opts.timeoutMs, opts.maxRetries, opts.retryBackoffMs,
-        oauth = opts.oauth), base = url)
+        oauth = opts.oauth), base = url, fields = Some(Set(f)))
     }
     // one page chain followed to its end: (values, rows read)
     @scala.annotation.tailrec
@@ -1278,14 +1331,15 @@ class ODataAggPartitionReader(agg: ODataPushedAgg, opts: ODataOptions)
   private var nextLink: Option[String] = None
   private var current: Map[String, String] = _
 
+  private val reads = new PageReads(opts)
+
   private def loadPage(url: String): Unit = {
-    val page = ODataClient.parsePage(ODataClient.getWithRetry(
-      url, opts.user, opts.password, opts.timeoutMs,
-      opts.maxRetries, opts.retryBackoffMs, oauth = opts.oauth),
-      base = url)
+    val page = reads.fetch(url)
     rows = page.rows.iterator
     nextLink = page.nextLink
   }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = reads.metrics
 
   override def next(): Boolean = {
     while (!rows.hasNext) {
@@ -1518,14 +1572,23 @@ class ODataPartitionReader(schema: StructType, opts: ODataOptions,
     ODataClient.buildUrl(opts.entityUrl(opts.entity), params)
   }
 
-  private def loadPage(url: String): Unit = {
-    val page = ODataClient.parsePage(ODataClient.getWithRetry(
-      url, opts.user, opts.password, opts.timeoutMs,
-      opts.maxRetries, opts.retryBackoffMs, oauth = opts.oauth),
-      base = url)
+  private val reads = new PageReads(opts)
+
+  // the row fields this reader decodes: the pruned schema's, plus the
+  // paging annotation of every nav it expands; every field when the
+  // extras map is read
+  private val pageFields: Option[Set[String]] =
+    if (opts.extrasEnabled && schema.fieldNames.contains(opts.extraColumnName)) None
+    else Some(schema.fieldNames.toSet ++ effExpands.map(e => s"${e.nav}@odata.nextLink"))
+
+  private def setPage(page: ODataClient.Page): Unit = {
     rows = page.rows.iterator
     nextLink = page.nextLink
   }
+
+  private def loadPage(url: String): Unit = setPage(reads.fetch(url, pageFields))
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = reads.metrics
 
   /** Advance to the next value's chain; R4 tolerance is PER VALUE —
     * one failing value logs and skips, the rest of the bin proceeds
@@ -1553,9 +1616,7 @@ class ODataPartitionReader(schema: StructType, opts: ODataOptions,
             anyChainStarted = true
             pre match {
               case Some(r) if r.status >= 200 && r.status < 300 =>
-                val page = ODataClient.parsePage(r.body, base = firstUrl(v))
-                rows = page.rows.iterator
-                nextLink = page.nextLink
+                setPage(reads.decode(r, firstUrl(v), pageFields))
               case Some(r) if opts.maxRetries > 0 =>
                 // a failed SUB-response re-fetches LIVE so the
                 // per-request retry budget applies to batched chains
@@ -1731,10 +1792,7 @@ class ODataPartitionReader(schema: StructType, opts: ODataOptions,
       Some(ODataClient.resolveLink(opts.entityUrl(opts.entity), first))
     while (url.isDefined) {
       if (opts.requestPauseMs > 0) Thread.sleep(opts.requestPauseMs) // R5
-      val page = ODataClient.parsePage(ODataClient.getWithRetry(
-        url.get, opts.user, opts.password, opts.timeoutMs,
-        opts.maxRetries, opts.retryBackoffMs, oauth = opts.oauth),
-        base = url.get)
+      val page = reads.fetch(url.get)
       out ++= page.rows.map(rowFromMap(_, e, nested): Any)
       url = page.nextLink
     }

@@ -120,6 +120,89 @@ class EtlSpec extends SparkSpec {
     assert(lines.head == "id,v" && lines.size == 3)
   }
 
+  // the sink directory's files other than checksums, and the lines of
+  // each part file
+  private def csvDir(dir: String): (Seq[String], Seq[Seq[String]]) = {
+    val files = new java.io.File(dir).listFiles().toSeq.filterNot(_.getName.endsWith(".crc"))
+      .sortBy(_.getName)
+    val parts = files.filter(_.getName.startsWith("part-"))
+    (files.map(f => if (f.getName.startsWith("part-")) "part" else f.getName),
+      parts.map { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().toVector finally src.close()
+      })
+  }
+
+  // a 4-partition frame whose values need quoting, embedded newlines included
+  private def fourParts = spark.range(0, 40, 1, 4).select(col("id"),
+    concat(lit("v,\"q\"\n"), col("id")).as("text"), (col("id") % 3 === 0).as("flag"))
+
+  test("csv sink: parallel parts concatenate into one file with the coalesced write's lines") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_csv_parts").toString
+    val df = fourParts
+    assert(df.rdd.getNumPartitions == 4)
+    Etl.writeCsv(df, s"$dir/parts")
+    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$dir/coalesced")
+    val (files, Seq(lines)) = csvDir(s"$dir/parts")
+    val (_, Seq(want)) = csvDir(s"$dir/coalesced")
+    assert(files == Seq("_SUCCESS", "part"))
+    assert(lines.head == "id,text,flag" && lines.count(_ == "id,text,flag") == 1)
+    assert(lines.sorted == want.sorted)
+    assert(spark.read.option("header", "true").option("multiLine", "true").csv(s"$dir/parts")
+      .count() == 40)
+    // only the sink's directory is left beside it: no temporary one
+    assert(new java.io.File(dir).list().sorted.toSeq == Seq("coalesced", "parts"))
+  }
+
+  test("csv sink: an empty frame writes what the coalesced write wrote, one header-only file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_csv_empty").toString
+    val empty = spark.range(0, 40, 1, 4).where(col("id") < 0)
+      .groupBy((col("id") % 5).as("k")).agg(count(lit(1)).as("n"))
+    Etl.writeCsv(empty, s"$dir/out")
+    empty.coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$dir/coalesced")
+    assert(csvDir(s"$dir/out") == csvDir(s"$dir/coalesced"))
+    assert(csvDir(s"$dir/out") == (Seq("_SUCCESS", "part"), Seq(Vector("k,n"))))
+  }
+
+  test("csv sink: overwrite replaces an existing directory's files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_csv_overwrite").toString
+    Etl.writeCsv(spark.range(0, 100, 1, 4).toDF("old"), s"$dir/out")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "out", "stale.txt"), "x")
+    Etl.writeCsv(Seq((1, "a"), (2, "b")).toDF("id", "v").repartition(2), s"$dir/out")
+    val (files, Seq(lines)) = csvDir(s"$dir/out")
+    assert(files == Seq("_SUCCESS", "part"))
+    assert(lines.head == "id,v" && lines.tail.sorted == Seq("1,a", "2,b"))
+    assert(new java.io.File(dir).list().toSeq == Seq("out"))
+  }
+
+  test("csv sink: the write's final stage runs one task per partition, not one") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft_csv_tasks").toString
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))) match {
+          case Some("csv sink") => tasks.add(e.stageInfo.numTasks)
+          case Some("csv sink: done") => done.countDown()
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobDescription("csv sink")
+      Etl.writeCsv(fourParts, s"$dir/out")
+      spark.sparkContext.setJobDescription("csv sink: done")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.setJobDescription(null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(tasks.asScala.toSeq.map(_.intValue) == Seq(4))
+  }
+
   test("flagship entry returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

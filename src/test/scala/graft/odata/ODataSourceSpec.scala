@@ -2905,6 +2905,30 @@ class ODataSourceSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("task metrics: pages and rows equal the data pages the server saw and the rows read") {
+    // 3 chains of 7, 7 and 6 rows, served 3 to a page: 3 + 3 + 2 pages;
+    // every row spills a __metadata object the scan skips
+    val rows = mkRows(20).map(_ + ("__metadata" -> """{"uri": "https://h/svc/E('1')"}"""))
+    val srv = new ODataStubServer(rows, "C0CHAR_STRUCTURE", serverPageSize = 3,
+      extraServedFields = Seq("__metadata"), rawJsonFields = Set("__metadata")).start()
+    try {
+      val df = read(srv)
+      val t0 = System.nanoTime()
+      assert(df.collect().length == 20)
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      // a chain's first page and its continuations carry the chain's $filter
+      val dataPages = srv.requestLog.count(u =>
+        Option(new java.net.URI(u).getQuery).exists(_.contains("$filter=")))
+      assert(dataPages == 8, srv.requestLog.mkString("\n"))
+      val m = scanOf(df).metrics
+      assert(m("pages").value == dataPages)
+      assert(m("rows").value == 20)
+      assert(m("responseBytes").value > 0)
+      assert(m("decodeMs").value >= 0 && m("decodeMs").value <= wallMs,
+        s"decodeMs ${m("decodeMs").value} of a $wallMs ms action")
+    } finally srv.stop()
+  }
+
   test("end-to-end: odata scan through the reference ETL pipeline (golden shape)") {
     val srv = new ODataStubServer(mkRows(9) ++ mkRows(2), "C0CHAR_STRUCTURE").start() // dups
     try {
